@@ -22,11 +22,11 @@ families, all expressed as shuffle-conscious DataFrame plans over a
    join is *lossless*, so results equal the brute-force cross join
    without ever materializing it.
 
-Hashing: the engine's fast path is ``xxhash64`` (JVM codegen, no md5
-cost); ``hash_mode="md5"`` derives a 60-bit integer from the md5 hex
-prefix — bit-identical to the DuckDB oracle expression
-``('0x' || substring(md5(s),1,15))::BIGINT``, which is what the
-correctness gate runs. Both modes share every plan below.
+Hashing: MinHash and SimHash derive their token/shingle hashes from
+an md5 hex prefix — bit-identical to the DuckDB oracle expressions
+(``('0x' || substring(md5(s),1,15))::BIGINT`` for SimHash), which is
+what the correctness gate runs. Internal join keys that no oracle
+sees (shingle sets, verify intersections) use ``xxhash64``.
 
 Scale notes (100 TB): shingle explosion is linear in corpus size and
 shuffles once per groupBy; hot shingles (boilerplate) should be
@@ -58,18 +58,6 @@ __all__ = [
     "embedding_topk_pairs",
     "semdedup",
 ]
-
-
-def hash60(c: Column, *, mode: str = "md5") -> Column:
-    """60-bit non-negative integer hash of a string column.
-
-    ``md5`` mode matches DuckDB ``('0x'||substring(md5(s),1,15))::BIGINT``
-    exactly (oracle parity); ``xx`` mode is xxhash64 (fast path, stays
-    in whole-stage codegen).
-    """
-    if mode == "md5":
-        return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
-    return F.xxhash64(c)
 
 
 def normalized_tokens(text: Column) -> Column:
@@ -201,6 +189,10 @@ def ngram_jaccard_pairs(
 #: Universal-hash modulus (Mersenne prime 2^31 - 1).
 MINHASH_P = 2147483647
 
+#: MinHash base hash of a shingle: the first 32 bits of its md5, the
+#: same expression the DuckDB oracle computes.
+_MINHASH_BASE = "cast(conv(substring(md5(shingle), 1, 8), 16, 10) as bigint)"
+
 
 def minhash_coeffs(num_hashes: int, *, seed: int = 9176) -> list[tuple[int, int]]:
     """Deterministic (a, b) pairs for the universal family
@@ -221,19 +213,12 @@ def minhash_signatures(
     *,
     id_col: str = "doc_id",
     num_hashes: int = 16,
-    hash_mode: str = "md5",
 ) -> DataFrame:
     """(id, seed, mh): K min-hashes via a universal family over ONE base
-    hash per shingle — (a_i·base + b_i) mod P instead of K fresh
-    md5/xxhash calls (16× less hashing; the dominant minhash cost).
-    ``md5`` base matches the DuckDB oracle; ``xx`` is the faster
-    engine-only mode. min() partial-aggregates map-side.
+    hash per shingle — (a_i·base + b_i) mod P instead of K fresh md5
+    calls (16× less hashing; the dominant minhash cost). The md5 base
+    matches the DuckDB oracle. min() partial-aggregates map-side.
     """
-    if hash_mode == "md5":
-        base = "cast(conv(substring(md5(shingle), 1, 8), 16, 10) as bigint)"
-    else:
-        # fold xxhash64 into the same positive 32-bit range
-        base = "pmod(xxhash64(shingle), 4294967296L)"
     coeffs = minhash_coeffs(num_hashes)
     a_lit = "array(" + ",".join(f"{a}L" for a, _ in coeffs) + ")"
     b_lit = "array(" + ",".join(f"{b}L" for _, b in coeffs) + ")"
@@ -244,7 +229,7 @@ def minhash_signatures(
         f" {MINHASH_P}L) as h))"
     )
     return (
-        sh.withColumn("base", F.expr(base))
+        sh.withColumn("base", F.expr(_MINHASH_BASE))
         .select(id_col, F.explode(seeded).alias("x"))
         .select(id_col, F.col("x.seed").alias("seed"), F.col("x.h").alias("h"))
         .groupBy(id_col, "seed")
@@ -281,24 +266,17 @@ def minhash_band_table(
     id_col: str = "doc_id",
     num_hashes: int = 16,
     rows_per_band: int = 4,
-    hash_mode: str = "md5",
 ) -> DataFrame:
     """(id, band, sig) in ONE aggregation: collect each doc's shingle
     base-hashes, then compute all K minhashes and all band signatures
     in a single Arrow-batched stage. Same output as
     ``minhash_band_buckets(minhash_signatures(sh))`` with one shuffle
     (the doc-key collect) instead of three."""
-    if hash_mode == "md5":
-        base = "cast(conv(substring(md5(shingle), 1, 8), 16, 10) as bigint)"
-    else:
-        base = "pmod(xxhash64(shingle), 4294967296L)"
     coeffs = minhash_coeffs(num_hashes)
     nbands = num_hashes // rows_per_band
-    per_doc = (
-        (sh if "base" in sh.columns else sh.withColumn("base", F.expr(base)))
-        .groupBy(id_col)
-        .agg(F.collect_list("base").alias("bases"))
-    )
+    if "base" not in sh.columns:
+        sh = sh.withColumn("base", F.expr(_MINHASH_BASE))
+    per_doc = sh.groupBy(id_col).agg(F.collect_list("base").alias("bases"))
     # K minhashes + band signatures from each doc's base-hash array in
     # one Arrow-batched numpy stage. A higher-order-expression variant
     # (transform(sequence(0,K-1), s -> array_min(transform(bases, …))))
@@ -341,7 +319,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 16,
     rows_per_band: int = 4,
     threshold: float = 0.8,
-    hash_mode: str = "md5",
     fan_out: bool = True,
 ) -> DataFrame:
     """MinHash-LSH near-dup pairs, verified: shingle → K minhashes →
@@ -370,13 +347,13 @@ def minhash_lsh_pairs(
     # the shingle STRINGS tripled the block footprint and at sf1 a few
     # repeated calls exhausted driver storage memory until broadcasts
     # failed.
-    if hash_mode == "md5":
-        base = "cast(conv(substring(md5(shingle), 1, 8), 16, 10) as bigint)"
-    else:
-        base = "pmod(xxhash64(shingle), 4294967296L)"
     sh = (
         shingle_table(docs, id_col=id_col, text_col=text_col, n=n, fan_out=fan_out)
-        .select(id_col, F.expr(base).alias("base"), F.xxhash64("shingle").alias("shx"))
+        .select(
+            id_col,
+            F.expr(_MINHASH_BASE).alias("base"),
+            F.xxhash64("shingle").alias("shx"),
+        )
         .localCheckpoint(eager=True)
     )
     # register for release_caches(): sequential runners drop the refs
@@ -390,7 +367,6 @@ def minhash_lsh_pairs(
         id_col=id_col,
         num_hashes=num_hashes,
         rows_per_band=rows_per_band,
-        hash_mode=hash_mode,
     )
     # Candidate pairs via the distributed bucket self-join. (A
     # bucket-local alternative — collect each bucket's ids, emit C(m,2)
@@ -455,13 +431,11 @@ def simhash_table(
     id_col: str = "doc_id",
     text_col: str = "text",
     bits: int = 60,
-    hash_mode: str = "md5",
 ) -> DataFrame:
     """(id, simhash): tf-weighted SimHash over whitespace tokens.
 
-    ``md5`` mode (oracle parity AND the fast path): a document-local
-    Arrow-batched ``mapInPandas`` stage — tokenize, term-frequency
-    dict, ``hashlib.md5`` per distinct token (bit-identical to the
+    A document-local Arrow-batched ``mapInPandas`` stage — tokenize,
+    term-frequency dict, ``hashlib.md5`` per distinct token (bit-identical to the
     DuckDB oracle's ``('0x'||substring(md5(s),1,15))::BIGINT``), and a
     numpy (d × bits) vote matrix per doc. ZERO shuffles beyond the
     fan-out repartition; a per-partition token→hash cache amortizes
@@ -474,105 +448,69 @@ def simhash_table(
     Arrow batch path beats whole-stage codegen because the work is
     per-row bit arithmetic, not relational.
 
-    ``xx`` mode: pure-JVM plan for callers that must stay off the
-    Python worker path — explode → tf groupBy → xxhash64 per distinct
-    (doc, token) → ``bits`` flat SUM(CASE) aggregates + sign-bitmap
-    projection. The fan-out's hashpartitioning(id) satisfies
-    ClusteredDistribution for both groupBys (partitioning-subset
-    rule), so both aggregations are partition-local.
-
-    Both modes drop NULL-text docs, matching the oracle's unnest
-    semantics.
+    NULL-text docs are dropped, matching the oracle's unnest semantics.
     """
-    if hash_mode == "md5":
-        import hashlib
-        import re as _re
+    import hashlib
+    import re as _re
 
-        import numpy as np
-        import pandas as pd
-        from pyspark.sql.types import LongType, StructField, StructType
+    from pyspark.sql.types import LongType, StructField, StructType
 
-        id_field = docs.schema[id_col]
-        schema = StructType(
-            [
-                StructField(id_field.name, id_field.dataType, id_field.nullable),
-                StructField("simhash", LongType(), True),
-            ]
-        )
-        shifts = np.arange(bits, dtype=np.uint64)
-
-        def _simhash_batches(batches):
-            cache: dict = {}
-
-            def h60(tok: str) -> int:
-                v = cache.get(tok)
-                if v is None:
-                    v = int(hashlib.md5(tok.encode()).hexdigest()[:15], 16)
-                    cache[tok] = v
-                return v
-
-            for pdf in batches:
-                out_ids: list = []
-                out_sig: list = []
-                for did, text in zip(pdf[id_col], pdf[text_col]):
-                    if text is None:
-                        continue
-                    # replicate the ORACLE's tokenization exactly:
-                    # trim() strips SPACES only (both engines), the
-                    # split class is ASCII \s, and DuckDB's
-                    # string_split_regex keeps leading AND trailing
-                    # empty fields — Python re.split matches that;
-                    # Java's split() would DROP trailing empties, a
-                    # latent divergence the old JVM plan carried for
-                    # text ending in non-space whitespace
-                    toks = _re.split(
-                        r"[ \t\n\x0b\f\r]+", text.strip(" ").lower()
-                    )
-                    tf: dict = {}
-                    for t in toks:
-                        tf[t] = tf.get(t, 0) + 1
-                    hs = np.fromiter((h60(t) for t in tf), dtype=np.uint64, count=len(tf))
-                    ws = np.fromiter(tf.values(), dtype=np.int64, count=len(tf))
-                    votes = (ws[:, None] * (2 * ((hs[:, None] >> shifts) & 1).astype(np.int64) - 1)).sum(axis=0)
-                    out_ids.append(did)
-                    out_sig.append(int(((votes > 0).astype(np.uint64) << shifts).sum()))
-                yield pd.DataFrame(
-                    {
-                        id_col: pd.Series(out_ids, dtype=pdf[id_col].dtype),
-                        "simhash": pd.Series(out_sig, dtype="int64"),
-                    }
-                )
-
-        return (
-            _fan_out(docs, id_col)
-            .select(id_col, text_col)
-            .mapInPandas(_simhash_batches, schema=schema)
-        )
-    toks = _fan_out(docs, id_col).select(
-        id_col, F.explode(normalized_tokens(F.col(text_col))).alias("tok")
-    )
-    tf = toks.groupBy(id_col, "tok").agg(F.count(F.lit(1)).alias("w"))
-    th = tf.select(id_col, "w", hash60(F.col("tok"), mode=hash_mode).alias("h"))
-    votes = th.groupBy(id_col).agg(
-        *[
-            F.sum(
-                F.when(
-                    F.shiftright("h", b).bitwiseAND(F.lit(1)) == 1, F.col("w")
-                ).otherwise(-F.col("w"))
-            ).alias(f"_v{b}")
-            for b in range(bits)
+    id_field = docs.schema[id_col]
+    schema = StructType(
+        [
+            StructField(id_field.name, id_field.dataType, id_field.nullable),
+            StructField("simhash", LongType(), True),
         ]
     )
-    bitmap = sum(
-        [
-            F.when(F.col(f"_v{b}") > 0, F.lit(1 << b).cast("long")).otherwise(
-                F.lit(0).cast("long")
+    shifts = np.arange(bits, dtype=np.uint64)
+
+    def _simhash_batches(batches):
+        cache: dict = {}
+
+        def h60(tok: str) -> int:
+            v = cache.get(tok)
+            if v is None:
+                v = int(hashlib.md5(tok.encode()).hexdigest()[:15], 16)
+                cache[tok] = v
+            return v
+
+        for pdf in batches:
+            out_ids: list = []
+            out_sig: list = []
+            for did, text in zip(pdf[id_col], pdf[text_col]):
+                if text is None:
+                    continue
+                # replicate the ORACLE's tokenization exactly:
+                # trim() strips SPACES only (both engines), the
+                # split class is ASCII \s, and DuckDB's
+                # string_split_regex keeps leading AND trailing
+                # empty fields — Python re.split matches that;
+                # Java's split() would DROP trailing empties, a
+                # latent divergence the old JVM plan carried for
+                # text ending in non-space whitespace
+                toks = _re.split(
+                    r"[ \t\n\x0b\f\r]+", text.strip(" ").lower()
+                )
+                tf: dict = {}
+                for t in toks:
+                    tf[t] = tf.get(t, 0) + 1
+                hs = np.fromiter((h60(t) for t in tf), dtype=np.uint64, count=len(tf))
+                ws = np.fromiter(tf.values(), dtype=np.int64, count=len(tf))
+                votes = (ws[:, None] * (2 * ((hs[:, None] >> shifts) & 1).astype(np.int64) - 1)).sum(axis=0)
+                out_ids.append(did)
+                out_sig.append(int(((votes > 0).astype(np.uint64) << shifts).sum()))
+            yield pd.DataFrame(
+                {
+                    id_col: pd.Series(out_ids, dtype=pdf[id_col].dtype),
+                    "simhash": pd.Series(out_sig, dtype="int64"),
+                }
             )
-            for b in range(bits)
-        ],
-        F.lit(0).cast("long"),
+
+    return (
+        _fan_out(docs, id_col)
+        .select(id_col, text_col)
+        .mapInPandas(_simhash_batches, schema=schema)
     )
-    return votes.select(id_col, bitmap.alias("simhash"))
 
 
 def simhash_pairs(
@@ -582,7 +520,6 @@ def simhash_pairs(
     text_col: str = "text",
     bits: int = 60,
     max_distance: int = 4,
-    hash_mode: str = "md5",
 ) -> DataFrame:
     """(doc_a, doc_b, hamming ≤ max_distance) — lossless banded join.
 
@@ -601,9 +538,7 @@ def simhash_pairs(
     a static bit test per candidate, emitted exactly once, no second
     shuffle.
     """
-    sh = simhash_table(
-        docs, id_col=id_col, text_col=text_col, bits=bits, hash_mode=hash_mode
-    )
+    sh = simhash_table(docs, id_col=id_col, text_col=text_col, bits=bits)
     # both self-join legs reference the signature table: the lazy
     # checkpoint collapses the two plan clones of the tokenize+hash
     # signature subtree into one pass (measured 1.40 -> 0.93 s at
@@ -973,10 +908,15 @@ def connected_components(
 
     Two physical paths, identical results:
 
-    - edge set ≤ ``driver_threshold``: collect + union-find on the
-      driver (near-dup graphs are minuscule next to the corpus — even
-      at 100 TB a dup-pair list is broadcast-scale; iterating Spark
-      jobs for it wastes whole seconds of fixed overhead per round);
+    - at most ``driver_threshold`` rows of ``pairs``: collect +
+      union-find on the driver (near-dup graphs are minuscule next to
+      the corpus — even at 100 TB a dup-pair list is broadcast-scale;
+      iterating Spark jobs for it wastes whole seconds of fixed
+      overhead per round). The gate counts RAW pair rows, before any
+      symmetrizing or dedup, so callers must emit each pair once (one
+      row per unordered pair, as every pair generator in this module
+      does) — a caller emitting both directions halves the effective
+      threshold;
     - larger: distributed min-label propagation to fixpoint —
       O(diameter) rounds, one join + one groupBy each, lineage cut per
       round (the standard big-graph CC shape).

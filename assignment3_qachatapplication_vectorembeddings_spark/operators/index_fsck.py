@@ -11,9 +11,10 @@ Report vocabulary:
 
 - **errors** — protocol violations: a meta/manifest references a
   directory that does not exist (a reader resolving it would crash),
-  an unparseable NEWEST manifest with no complete fallback, a revoked
-  map naming unassigned segments. A healthy index NEVER has errors,
-  even mid-maintenance.
+  an unparseable NEWEST manifest with no complete fallback, a meta
+  whose ``format`` is missing or not the engine's (rebuild it), a
+  missing revoked map or one naming unassigned segments. A healthy
+  index NEVER has errors, even mid-maintenance.
 - **warnings** — reclaimable or transient states: orphan generation /
   segment / quantizer dirs (vacuum fodder; also what an in-flight
   writer looks like from outside), expired lease files, a derived
@@ -27,7 +28,8 @@ Usage::
     report = fsck_primary(vindex)
     report = fsck_derived(ann, deep=True)   # + row-level parity
 
-CLI: ``python tools/index_fsck.py <primary_path> [derived_path ...]``
+CLI: ``python -m assignment3_qachatapplication_vectorembeddings_spark.cli fsck
+--index PRIMARY_PATH [--ivfpq PATH] [--text PATH] [--deep]``
 """
 
 from __future__ import annotations
@@ -207,11 +209,23 @@ def fsck_derived(index, *, deep: bool = False) -> dict:
             else:
                 report["warnings"].append(f"meta v{v} torn and superseded")
             continue
+        if payload.get("format") != index.FORMAT:
+            report["errors"].append(
+                f"meta v{v} has format {payload.get('format')!r}, not "
+                f"{index.FORMAT} — readers refuse it; rebuild the index "
+                "into a fresh path"
+            )
+            continue
         assign = payload.get("assign")
         if not isinstance(assign, dict) or "data_version" not in payload:
             report["errors"].append(
                 f"meta v{v} parses but is missing a usable 'assign' map "
                 "or 'data_version' — corrupt metadata"
+            )
+            continue
+        if not isinstance(payload.get("revoked"), dict):
+            report["errors"].append(
+                f"meta v{v} has no usable 'revoked' map — corrupt metadata"
             )
             continue
         metas[v] = payload
@@ -241,13 +255,11 @@ def fsck_derived(index, *, deep: bool = False) -> dict:
                     f"meta v{v} has a malformed seg_quantizer entry "
                     f"for {seg!r}: {sq!r}"
                 )
-        revoked = payload.get("revoked")
-        if revoked is not None:
-            extra = sorted(set(revoked) - set(assign.values()))
-            if extra:
-                report["errors"].append(
-                    f"meta v{v} revoked-map names unassigned segment(s) {extra}"
-                )
+        extra = sorted(set(payload["revoked"]) - set(assign.values()))
+        if extra:
+            report["errors"].append(
+                f"meta v{v} revoked-map names unassigned segment(s) {extra}"
+            )
 
     if metas:
         head_v = max(metas)
@@ -302,12 +314,10 @@ def fsck_derived(index, *, deep: bool = False) -> dict:
             if index.KIND == "ivfpq":
                 frames = index._segment_frames(head, "", index.SEGMENT_SCHEMA)
             else:
-                # layout-agnostic per-doc rows (sentinel partition or
-                # legacy doclens sidecar — round-10 fused write)
                 frames = index._doclens_frames(head)
             served_frames = []
-            for df, ts, rv in frames:
-                cond = index._serving_filter(ts, rv)
+            for df, _ts, rv in frames:
+                cond = index._serving_filter(rv)
                 sdf = df.filter(cond) if cond is not None else df
                 served_frames.append(sdf.select("id"))
             if served_frames:

@@ -6,8 +6,7 @@ stored vectors and the ANN structure atomically, so a query after an
 upsert always sees the new vectors. Our engine's primary store is the
 versioned-manifest :class:`VectorIndex`; its serving accelerators —
 the cluster-partitioned IVFPQ codes table (``operators/ann.py``) and
-the bucket-partitioned inverted text index
-(``operators/text_search.py``) — were build-once sidecars with no tie
+a bucket-partitioned inverted text index — were build-once sidecars with no tie
 to the manifest version they were built from, so a serving stack that
 upserted then queried the persisted index silently read stale results
 (round-4 verdict, gap #1). This module closes that gap with the
@@ -86,9 +85,18 @@ class _SyncedIndexBase:
     helpers, so the same atomic-create / conditional-put contract
     applies). Readers resolve the highest complete meta once per
     query — snapshot isolation for the index itself.
+
+    Every meta carries ``format``: the one on-disk layout this engine
+    reads and writes. A meta with any other (or no) format is refused
+    with an error naming the fix — rebuild into a fresh path — rather
+    than read through compatibility branches.
     """
 
     KIND = "base"
+
+    #: on-disk layout stamped into every meta; bump on any change to
+    #: the meta keys or the segment layout a reader depends on
+    FORMAT = 1
 
     def __init__(self, vindex: VectorIndex, path: str):
         self.vindex = vindex
@@ -137,6 +145,12 @@ class _SyncedIndexBase:
                 payload = json.loads(data)
             except ValueError:
                 continue  # torn write of the newest meta: fall back one
+            if payload.get("format") != self.FORMAT:
+                raise ValueError(
+                    f"{self.KIND} index at {self.path} has meta format "
+                    f"{payload.get('format')!r}; this engine reads only "
+                    f"format {self.FORMAT} — rebuild it into a fresh path"
+                )
             payload["meta_version"] = version
             cache[version] = payload
             for v in sorted(cache)[:-4]:
@@ -175,6 +189,7 @@ class _SyncedIndexBase:
                 )
         payload = dict(
             payload,
+            format=self.FORMAT,
             kind=self.KIND,
             meta_version=version,
             committed_utc=datetime.now(timezone.utc).isoformat(),
@@ -489,9 +504,7 @@ class _SyncedIndexBase:
     @staticmethod
     def _quantizer_stamp(name: str) -> float | None:
         """age_sec parsed from ``quantizer-t<ms>-<qid>``; None for
-        names this engine didn't write (legacy fixed-path sidecars are
-        named ``quantizer_centroids``/``quantizer_codebooks`` — no
-        ``-`` — and never match the ``quantizer-`` prefix)."""
+        names this engine didn't write."""
         parts = name.split("-")
         if len(parts) < 2 or not parts[1].startswith("t"):
             return None
@@ -516,26 +529,23 @@ class _SyncedIndexBase:
         skips parquet footer inference — without it every serving query
         pays one driver job PER SEGMENT just to learn a layout this
         module wrote itself (round-6: serving-path plan construction is
-        job-free). ``revoked`` is ``None`` for legacy metas (caller
-        must filter by the assigned list). ``names=True`` prepends the
-        segment dir name to each tuple (per-segment quantizer routing
-        needs it; default stays 3-tuples for existing callers)."""
+        job-free). ``names=True`` prepends the segment dir name to each
+        tuple (per-segment quantizer routing needs it; default stays
+        3-tuples for existing callers)."""
         by_seg: dict[str, list[str]] = {}
         for t, seg in meta["assign"].items():
             by_seg.setdefault(seg, []).append(t)
-        revoked_map = meta.get("revoked")
         spark = self.vindex.spark
         out = []
         for seg, titles in sorted(by_seg.items()):
             p = f"{self.path}/{seg}" + (f"/{subdir}" if subdir else "")
             reader = spark.read.schema(schema) if schema else spark.read
-            revoked = None if revoked_map is None else revoked_map.get(seg, [])
-            row = (reader.parquet(p), titles, revoked)
+            row = (reader.parquet(p), titles, meta["revoked"].get(seg, []))
             out.append((seg, *row) if names else row)
         return out
 
     @staticmethod
-    def _serving_filter(assigned: list[str], revoked: list[str] | None):
+    def _serving_filter(revoked: list[str]):
         """Cheapest EXACT live-rows predicate for one segment read. A
         segment contains only rows of titles written into it, and a
         title once repointed away never returns — so the live rows are
@@ -544,25 +554,16 @@ class _SyncedIndexBase:
         literal list, which at 100 TB (millions of titles per segment)
         would blow up the plan before the scan even starts. Zero churn
         (every segment right after build/compact) means NO filter at
-        all. ``revoked=None`` (pre-round-6 meta) falls back to the
-        assigned-list filter."""
-        if revoked is None:
-            return F.col("title").isin(list(assigned))
+        all."""
         if revoked:
             return ~F.col("title").isin(list(revoked))
         return None
 
-    def _update_revoked(
-        self, meta: dict, assign_new: dict, moved: Sequence[str]
-    ) -> dict | None:
+    @staticmethod
+    def _update_revoked(meta: dict, assign_new: dict, moved: Sequence[str]) -> dict:
         """Next meta's {segment: [revoked titles]} after ``moved``
         titles (changed or removed) left their old segments. Entries
-        for segments no longer assigned are dropped (vacuum fodder).
-        A legacy meta (no ``revoked`` key) has unknown churn history —
-        stay legacy (return None; serving keeps the assigned-list
-        filter) until a build()/compact() resets the baseline."""
-        if meta.get("revoked") is None:
-            return None
+        for segments no longer assigned are dropped (vacuum fodder)."""
         old_assign = meta["assign"]
         revoked: dict[str, list[str]] = {
             s: list(v) for s, v in meta["revoked"].items()
@@ -595,7 +596,7 @@ class _SyncedIndexBase:
         by_seg: dict[str, int] = {}
         for _t, seg in m["assign"].items():
             by_seg[seg] = by_seg.get(seg, 0) + 1
-        revoked = m.get("revoked") or {}
+        revoked = m["revoked"]
         out = {
             "kind": self.KIND,
             "built": True,
@@ -654,10 +655,10 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
 
     Layout::
 
-        {path}/_meta/v*.json                  # versioned meta commits
-        {path}/quantizer_centroids/           # frozen at build()
-        {path}/quantizer_codebooks/
-        {path}/seg-v*-<nonce>/cluster=<c>/    # immutable code segments
+        {path}/_meta/v*.json                       # versioned meta commits
+        {path}/quantizer-t<ms>-<qid>/centroids/    # one dir per build()/
+        {path}/quantizer-t<ms>-<qid>/codebooks/    # retrain(), never rewritten
+        {path}/seg-v*-<nonce>/cluster=<c>/         # immutable code segments
     """
 
     KIND = "ivfpq"
@@ -785,9 +786,7 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
         ).write.mode("overwrite").parquet(f"{base}/codebooks")
 
     def _load_quantizer(
-        self,
-        quantizer_id: str | None = None,
-        quantizer_dir: str | None = None,
+        self, quantizer_id: str, quantizer_dir: str
     ) -> tuple[np.ndarray, np.ndarray]:
         # the quantizer is FROZEN between build()/retrain() calls, so
         # one load serves every search/refresh on this instance (two
@@ -795,9 +794,8 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
         # meta's quantizer_id: an external rebuild (new id in the meta
         # this caller just resolved) misses the cache and reloads, so a
         # long-lived server instance can never score against a
-        # superseded quantizer. ``quantizer_dir`` (meta key since round
-        # 7) selects the versioned sidecar dir; a legacy meta without it
-        # reads the original fixed paths.
+        # superseded quantizer. ``quantizer_dir`` selects the versioned
+        # sidecar dir.
         # small keyed cache (not a single slot): partial retrain makes
         # MULTIPLE quantizers live at once — per-segment pinning — and a
         # single-entry cache would thrash reloading two quantizers on
@@ -809,15 +807,10 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
         if hit is not None:
             return hit
         spark = self.vindex.spark
-        if quantizer_dir is not None:
-            cent_path = f"{self.path}/{quantizer_dir}/centroids"
-            cb_path = f"{self.path}/{quantizer_dir}/codebooks"
-        else:
-            cent_path = f"{self.path}/quantizer_centroids"
-            cb_path = f"{self.path}/quantizer_codebooks"
-        cent = spark.read.parquet(cent_path).orderBy("cluster").collect()
+        base = f"{self.path}/{quantizer_dir}"
+        cent = spark.read.parquet(f"{base}/centroids").orderBy("cluster").collect()
         centroids = np.array([r["centroid"] for r in cent])
-        cb = spark.read.parquet(cb_path).orderBy("subspace", "code").collect()
+        cb = spark.read.parquet(f"{base}/codebooks").orderBy("subspace", "code").collect()
         m = 1 + max(r["subspace"] for r in cb)
         ksub = 1 + max(r["code"] for r in cb)
         dsub = len(cb[0]["centroid"])
@@ -834,15 +827,9 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
         segment. Partial retrain (:meth:`retrain` with ``titles``)
         leaves older segments encoded under older quantizers — each
         segment's codes are only meaningful under the quantizer that
-        produced them, so serving routes per segment. Legacy metas (no
-        ``seg_quantizer``) map every segment to the meta's top-level
-        quantizer — exactly the old single-quantizer behavior."""
-        default = (meta.get("quantizer_id"), meta.get("quantizer_dir"))
-        sq = meta.get("seg_quantizer") or {}
-        return {
-            seg: tuple(sq.get(seg, default))
-            for seg in set(meta["assign"].values())
-        }
+        produced them, so serving routes per segment."""
+        sq = meta["seg_quantizer"]
+        return {seg: tuple(sq[seg]) for seg in set(meta["assign"].values())}
 
     def _next_seg_quantizer(self, meta: dict, assign_new: dict) -> dict:
         """Carry the per-segment quantizer pins forward through a
@@ -855,7 +842,7 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
         head change (partial retrain) can never silently re-route an
         old segment's codes to a quantizer that didn't produce them."""
         prev = self._seg_quantizer_map(meta)
-        head = (meta.get("quantizer_id"), meta.get("quantizer_dir"))
+        head = (meta["quantizer_id"], meta["quantizer_dir"])
         live = set(assign_new.values())
         return {seg: list(prev.get(seg, head)) for seg in sorted(live)}
 
@@ -1017,9 +1004,7 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
             # 20M rehearsal measured the old full-corpus sample scan as
             # the dominant term (partial retrain 491 s vs full rebuild
             # 661 s — the encode term was already O(drifted)).
-            prev_q = self._load_quantizer(
-                m.get("quantizer_id"), m.get("quantizer_dir")
-            )
+            prev_q = self._load_quantizer(m["quantizer_id"], m["quantizer_dir"])
             rows = snap.read(titles=want)
             centroids, codebooks, sample = ivfpq_build(
                 rows,
@@ -1323,7 +1308,7 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
             assign = dict(m["assign"])
             if changed:
                 centroids, codebooks = self._load_quantizer(
-                    m.get("quantizer_id"), m.get("quantizer_dir")
+                    m["quantizer_id"], m["quantizer_dir"]
                 )
                 seg = self._new_segment(cur_version)
                 self._encode_titles(
@@ -1351,8 +1336,8 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
             "base_parts": cur_parts,
             "assign": assign,
             "revoked": self._update_revoked(m, assign, changed + removed),
-            "quantizer_id": m.get("quantizer_id"),
-            "quantizer_dir": m.get("quantizer_dir"),
+            "quantizer_id": m["quantizer_id"],
+            "quantizer_dir": m["quantizer_dir"],
             "seg_quantizer": self._next_seg_quantizer(m, assign),
             "recon_baseline": m.get("recon_baseline"),
             "params": m["params"],
@@ -1408,7 +1393,7 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
                     "refresh() before compact()"
                 )
             centroids, codebooks = self._load_quantizer(
-                m.get("quantizer_id"), m.get("quantizer_dir")
+                m["quantizer_id"], m["quantizer_dir"]
             )
             seg = self._new_segment(m["data_version"])
             self._encode_titles(live, centroids, codebooks, seg, reader=snap.read)
@@ -1420,9 +1405,7 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
             # this is the migration path that retires partial-retrain
             # generations (vacuum reclaims the old sidecars once no
             # retained meta references them)
-            seg_quantizer={
-                seg: [m.get("quantizer_id"), m.get("quantizer_dir")]
-            },
+            seg_quantizer={seg: [m["quantizer_id"], m["quantizer_dir"]]},
         )
         self._publish_meta(m["meta_version"] + 1, meta)
         return meta
@@ -1458,7 +1441,7 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
                     continue
                 cond = F.col("title").isin(ts)
             else:
-                cond = self._serving_filter(seg_titles, revoked)
+                cond = self._serving_filter(revoked)
             if cond is not None:
                 df = df.filter(cond)
             frames.append(df.select("id", "cluster", "codes", "norm"))
@@ -1687,8 +1670,6 @@ class SyncedTextIndex(_SyncedIndexBase):
         {path}/seg-v*-<nonce>/postings/bucket=<b>/   # (word, id, tf, dl, title)
         {path}/seg-v*-<nonce>/postings/bucket=-1/    # per-doc sentinel rows
                                                      # (word NULL, id, dl, title)
-        {path}/seg-v*-<nonce>/doclens/               # pre-round-10 sidecar
-                                                     # (id, dl, title)
 
     Corpus statistics (per-title doc counts and token sums) live IN the
     meta: N and avgdl for the live title set are exact driver-side
@@ -1700,23 +1681,17 @@ class SyncedTextIndex(_SyncedIndexBase):
     KIND = "text"
 
     #: what `_write_segment` writes (partition column included).
-    #: Since round 9 postings embed the document length (``dl`` —
-    #: functionally dependent on ``id``, +8 bytes per posting): the
-    #: BM25 length norm then comes straight off the postings row and
-    #: the serving path needs NO doclens scan or join at all — one
-    #: bucket-pruned scan per query instead of scan+scan+shuffle-join.
-    #: The doclens sidecar is still written: it is the per-doc row set
-    #: fsck deep-parity and the publish-time corpus stats read (and the
-    #: only place zero-token docs appear).
+    #: Postings embed the document length (``dl`` — functionally
+    #: dependent on ``id``, +8 bytes per posting), so the BM25 length
+    #: norm comes straight off the postings row: one bucket-pruned scan
+    #: per query, no length-norm join. The ``bucket=-1`` partition
+    #: holds one sentinel row per document (``word``/``tf`` NULL) — the
+    #: per-doc row set that publish-time corpus stats and fsck
+    #: deep-parity read, and the only place zero-token docs appear.
     POSTINGS_SCHEMA = (
         "word string, id string, title string, tf double, dl double, "
         "bucket int"
     )
-    #: pre-round-9 segments (meta lacks ``postings_dl``) — no dl column
-    POSTINGS_SCHEMA_LEGACY = (
-        "word string, id string, title string, tf double, bucket int"
-    )
-    DOCLENS_SCHEMA = "id string, title string, dl double"
 
     def __init__(self, vindex: VectorIndex, path: str, *, buckets: int = 64):
         super().__init__(vindex, path)
@@ -1737,25 +1712,11 @@ class SyncedTextIndex(_SyncedIndexBase):
         ]
 
     def _write_segment(
-        self,
-        titles: Sequence[str] | None,
-        segment: str,
-        reader=None,
-        *,
-        include_dl: bool = True,
-        sentinel: bool | None = None,
+        self, titles: Sequence[str] | None, segment: str, reader=None
     ) -> dict:
-        """Encode ``titles`` (None = all live) into ``segment``;
-        returns {title: [n_docs, n_dl, sum_dl]} for the meta.
-        ``include_dl`` embeds the doc length in each posting (the
-        round-9 layout); ``sentinel`` folds the per-doc length rows
-        into the postings write as a ``bucket=-1`` partition (the
-        round-10 layout — ONE write action and ONE tokenize pass per
-        segment instead of two of each; default: follow
-        ``include_dl``). Refresh of an older index passes the meta's
-        flags so every segment of one index shares one layout."""
-        if sentinel is None:
-            sentinel = include_dl
+        """Encode ``titles`` (None = all live) into ``segment`` in ONE
+        write action and ONE tokenize pass; returns {title: [n_docs,
+        n_dl, sum_dl]} for the meta."""
         read = reader if reader is not None else self.vindex.read
         rows = read(
             titles=None if titles is None else list(titles)
@@ -1770,88 +1731,41 @@ class SyncedTextIndex(_SyncedIndexBase):
             .cast("double")
             .alias("dl")
         )
-        if sentinel:
-            if not include_dl:
-                raise ValueError(
-                    "sentinel doclens layout requires dl-embedded postings"
+        # a NULL element prepended to each doc's token array rides the
+        # same explode/groupBy/shuffle/write as the postings and lands
+        # in the bucket=-1 partition as that doc's (id, title, dl) row.
+        # tokens_expr filters empties and split never yields NULL, so
+        # the sentinel cannot collide with a real word. The coalesce
+        # keeps NULL-text docs (ws NULL): concat of NULL would explode
+        # to zero rows and silently drop them from the doc-length set.
+        exploded = toks.select(
+            "id",
+            "title",
+            dl,
+            F.explode(
+                F.concat(
+                    F.array(F.lit(None).cast("string")),
+                    F.coalesce(F.col("ws"), F.array().cast("array<string>")),
                 )
-            # one fused action: a NULL element prepended to each doc's
-            # token array rides the same explode/groupBy/shuffle/write
-            # as the postings and lands in the bucket=-1 partition —
-            # the per-doc (id, title, dl) rows the two-write layout
-            # kept in a separate doclens/ sidecar (second tokenize
-            # pass + second commit, both pure fixed cost per segment).
-            # Postings rows are bit-identical to the two-write layout:
-            # tokens_expr filters empties and split never yields NULL,
-            # so the sentinel cannot collide with a real word. The
-            # coalesce keeps NULL-text docs (ws NULL): concat of NULL
-            # would explode to zero rows and silently drop them from
-            # the doc-length set.
-            exploded = toks.select(
+            ).alias("word"),
+        )
+        postings = (
+            exploded.groupBy("word", "id", "title", "dl")
+            .agg(F.count(F.lit(1)).cast("double").alias("tf"))
+            .select(
+                "word",
                 "id",
                 "title",
-                dl,
-                F.explode(
-                    F.concat(
-                        F.array(F.lit(None).cast("string")),
-                        F.coalesce(
-                            F.col("ws"), F.array().cast("array<string>")
-                        ),
-                    )
-                ).alias("word"),
-            )
-            postings = (
-                exploded.groupBy("word", "id", "title", "dl")
-                .agg(F.count(F.lit(1)).cast("double").alias("tf"))
-                .select(
-                    "word",
-                    "id",
-                    "title",
-                    F.when(F.col("word").isNotNull(), F.col("tf")).alias(
-                        "tf"
-                    ),
-                    "dl",
-                    F.when(
-                        F.col("word").isNotNull(),
-                        _term_bucket(F.col("word"), self.buckets),
-                    )
-                    .otherwise(F.lit(-1))
-                    .alias("bucket"),
+                F.when(F.col("word").isNotNull(), F.col("tf")).alias("tf"),
+                "dl",
+                F.when(
+                    F.col("word").isNotNull(),
+                    _term_bucket(F.col("word"), self.buckets),
                 )
+                .otherwise(F.lit(-1))
+                .alias("bucket"),
             )
-        elif include_dl:
-            # dl rides the posting row (exploded rows always have a
-            # non-null, non-empty ws, so size(ws) is the same double
-            # the doclens sidecar records for that id); it joins the
-            # group-by KEY — functionally dependent on id, so the
-            # (word, id, title) cardinality is unchanged
-            postings = (
-                toks.select(
-                    "id",
-                    "title",
-                    F.size("ws").cast("double").alias("dl"),
-                    F.explode("ws").alias("word"),
-                )
-                .groupBy("word", "id", "title", "dl")
-                .agg(F.count(F.lit(1)).cast("double").alias("tf"))
-                .withColumn(
-                    "bucket", _term_bucket(F.col("word"), self.buckets)
-                )
-            )
-        else:
-            postings = (
-                toks.select("id", "title", F.explode("ws").alias("word"))
-                .groupBy("word", "id", "title")
-                .agg(F.count(F.lit(1)).cast("double").alias("tf"))
-                .withColumn(
-                    "bucket", _term_bucket(F.col("word"), self.buckets)
-                )
-            )
-        if not sentinel:
-            doclens = toks.select("id", "title", dl)
-            doclens.write.mode("overwrite").parquet(
-                f"{self.path}/{segment}/doclens"
-            )
+        )
         (
             # sortWithinPartitions(word): inside each bucket file the
             # postings are word-clustered, so every parquet row group
@@ -1867,20 +1781,13 @@ class SyncedTextIndex(_SyncedIndexBase):
             .partitionBy("bucket")
             .parquet(f"{self.path}/{segment}/postings")
         )
-        if sentinel:
-            stats_src = (
-                # explicit schema: this module just wrote the file;
-                # footer inference would cost one extra driver job
-                self.vindex.spark.read.schema(self.POSTINGS_SCHEMA)
-                .parquet(f"{self.path}/{segment}/postings")
-                .where(F.col("bucket") == -1)
-            )
-        else:
-            stats_src = self.vindex.spark.read.schema(
-                self.DOCLENS_SCHEMA
-            ).parquet(f"{self.path}/{segment}/doclens")
         stats = (
-            stats_src.groupBy("title")
+            # explicit schema: this module just wrote the file; footer
+            # inference would cost one extra driver job
+            self.vindex.spark.read.schema(self.POSTINGS_SCHEMA)
+            .parquet(f"{self.path}/{segment}/postings")
+            .where(F.col("bucket") == -1)
+            .groupBy("title")
             .agg(
                 F.count(F.lit(1)).alias("n_docs"),
                 F.count("dl").alias("n_dl"),
@@ -1895,26 +1802,15 @@ class SyncedTextIndex(_SyncedIndexBase):
 
     def _doclens_frames(self, meta: dict) -> list:
         """[(per-doc (id, title, dl) frame, assigned titles, revoked)]
-        for every live segment, layout-agnostic: sentinel segments
-        (round 10) serve the ``bucket=-1`` partition of ``postings/``,
-        older segments the ``doclens/`` sidecar. Shared by deep fsck,
-        the chaos/consistency suites and any stats re-derivation."""
-        if meta.get("doclens_sentinel"):
-            return [
-                (
-                    df.where(F.col("bucket") == -1).select(
-                        "id", "title", "dl"
-                    ),
-                    ts,
-                    rv,
-                )
-                for df, ts, rv in self._segment_frames(
-                    meta, "postings", schema=self.POSTINGS_SCHEMA
-                )
-            ]
-        return self._segment_frames(
-            meta, "doclens", schema=self.DOCLENS_SCHEMA
-        )
+        for every live segment: the ``bucket=-1`` sentinel partition of
+        ``postings/``. Shared by deep fsck, the chaos/consistency suites
+        and any stats re-derivation."""
+        return [
+            (df.where(F.col("bucket") == -1).select("id", "title", "dl"), ts, rv)
+            for df, ts, rv in self._segment_frames(
+                meta, "postings", schema=self.POSTINGS_SCHEMA
+            )
+        ]
 
     def build(self) -> dict:
         with self._pinned_source() as (version, parts, snap):
@@ -1930,14 +1826,6 @@ class SyncedTextIndex(_SyncedIndexBase):
             "stats_totals": self._stats_totals(title_stats),
             "buckets": self.buckets,
             "tokenizer": TOKENIZER_VERSION,
-            # round-9 layout: dl embedded per posting (doclens-join-free
-            # serving). All-or-nothing per index: refresh/compact
-            # propagate the flag so segments never mix layouts.
-            "postings_dl": True,
-            # round-10 layout: per-doc length rows live in the
-            # postings' bucket=-1 sentinel partition (one write action
-            # per segment). Same all-or-nothing propagation.
-            "doclens_sentinel": True,
         }
         self._publish_meta(1 if m is None else m["meta_version"] + 1, meta)
         return meta
@@ -1955,13 +1843,7 @@ class SyncedTextIndex(_SyncedIndexBase):
             if changed:
                 seg = self._new_segment(cur_version)
                 title_stats.update(
-                    self._write_segment(
-                        changed,
-                        seg,
-                        reader=snap.read,
-                        include_dl=bool(m.get("postings_dl")),
-                        sentinel=bool(m.get("doclens_sentinel")),
-                    )
+                    self._write_segment(changed, seg, reader=snap.read)
                 )
                 for t in changed:
                     assign[t] = seg
@@ -1977,8 +1859,6 @@ class SyncedTextIndex(_SyncedIndexBase):
             "stats_totals": self._stats_totals(title_stats),
             "buckets": m["buckets"],
             "tokenizer": m["tokenizer"],
-            "postings_dl": bool(m.get("postings_dl")),
-            "doclens_sentinel": bool(m.get("doclens_sentinel")),
         }
         self._publish_meta(m["meta_version"] + 1, meta)
         return meta
@@ -2000,9 +1880,6 @@ class SyncedTextIndex(_SyncedIndexBase):
                     "refresh() before compact()"
                 )
             seg = self._new_segment(m["data_version"])
-            # compact rewrites EVERY live segment, so it is the safe
-            # point to migrate an older index to the dl-embedded,
-            # sentinel-doclens postings layout
             title_stats = self._write_segment(live, seg, reader=snap.read)
         meta = dict(
             m,
@@ -2010,8 +1887,6 @@ class SyncedTextIndex(_SyncedIndexBase):
             revoked={seg: []},
             title_stats=title_stats,
             stats_totals=self._stats_totals(title_stats),
-            postings_dl=True,
-            doclens_sentinel=True,
         )
         self._publish_meta(m["meta_version"] + 1, meta)
         return meta
@@ -2031,7 +1906,7 @@ class SyncedTextIndex(_SyncedIndexBase):
 
         ``titles`` applies the reference's ``$in`` metadata predicate
         (``QA_using_pinecone.py:41``) on the lexical serving path:
-        postings and doclens are read with (requested ∩ assigned)
+        postings are read with (requested ∩ assigned)
         titles per segment, and N / avgdl come from the meta's
         per-title ``title_stats`` of the REQUESTED set — so filtered
         index-served scores equal the in-plan ``bm25_scores`` over the
@@ -2122,7 +1997,7 @@ class SyncedTextIndex(_SyncedIndexBase):
         self, meta: dict, terms: list[str], titles: Sequence[str] | None
     ):
         """Shared scoped scan for the single-query and batch scorers:
-        returns ``(hits, doclens, n_docs, avgdl)`` or None (empty
+        returns ``(hits, n_docs, avgdl)`` or None (empty
         scope). Buckets are hashed client-side (parity-pinned
         xxhash64), segments read with explicit schemas and O(churn)
         title filters — construction launches no Spark job."""
@@ -2138,10 +2013,8 @@ class SyncedTextIndex(_SyncedIndexBase):
         want = None if titles is None else set(titles)
         if want is None:
             # publish-time totals: O(1) per query instead of an
-            # O(titles) driver sum (legacy metas fall back to the sum)
-            n_docs, n_dl, sum_dl = meta.get("stats_totals") or self._stats_totals(
-                meta["title_stats"]
-            )
+            # O(titles) driver sum
+            n_docs, n_dl, sum_dl = meta["stats_totals"]
         else:
             stats = {t: v for t, v in meta["title_stats"].items() if t in want}
             n_docs = sum(v[0] for v in stats.values())
@@ -2151,69 +2024,38 @@ class SyncedTextIndex(_SyncedIndexBase):
             return None
         avgdl = (sum_dl / n_dl) if n_dl else 0.0
 
-        def _title_cond(seg_titles, revoked):
-            """None = read everything, False = skip segment entirely."""
+        # dl rides the postings row: one bucket-pruned postings scan
+        # per query, no doclens scan and no per-query shuffle join
+        hit_frames = []
+        for df, seg_titles, revoked in self._segment_frames(
+            meta, "postings", schema=self.POSTINGS_SCHEMA
+        ):
             if want is not None:
                 ts = sorted(want & set(seg_titles))
                 if not ts:
-                    return False
-                return F.col("title").isin(ts)
-            return self._serving_filter(seg_titles, revoked)
-
-        # round-9 layout (dl embedded in postings): one bucket-pruned
-        # postings scan per query, no doclens scan and no per-query
-        # shuffle join. Legacy segments (no dl column) keep the join.
-        embedded_dl = bool(meta.get("postings_dl"))
-        post_schema = (
-            self.POSTINGS_SCHEMA if embedded_dl else self.POSTINGS_SCHEMA_LEGACY
-        )
-        hit_cols = ["word", "id", "tf", "dl"] if embedded_dl else [
-            "word",
-            "id",
-            "tf",
-        ]
-        hit_frames, dl_frames = [], []
-        for df, seg_titles, revoked in self._segment_frames(
-            meta, "postings", schema=post_schema
-        ):
-            cond = _title_cond(seg_titles, revoked)
-            if cond is False:
-                continue
+                    continue
+                cond = F.col("title").isin(ts)
+            else:
+                cond = self._serving_filter(revoked)
             pred = F.col("bucket").isin(list(want_buckets)) & F.col(
                 "word"
             ).isin(terms)
             if cond is not None:
                 pred = pred & cond
-            hit_frames.append(df.where(pred).select(*hit_cols))
-        if not embedded_dl:
-            for df, seg_titles, revoked in self._doclens_frames(meta):
-                cond = _title_cond(seg_titles, revoked)
-                if cond is False:
-                    continue
-                if cond is not None:
-                    df = df.where(cond)
-                dl_frames.append(df.select("id", "dl"))
+            hit_frames.append(df.where(pred).select("word", "id", "tf", "dl"))
         if not hit_frames:
             return None
-        hits = reduce(DataFrame.unionByName, hit_frames)
-        doclens = (
-            None if embedded_dl else reduce(DataFrame.unionByName, dl_frames)
-        )
-        return hits, doclens, n_docs, avgdl
+        return reduce(DataFrame.unionByName, hit_frames), n_docs, avgdl
 
     @staticmethod
     def _bm25_contrib(scan, k1: float, b: float):
         """(scored frame carrying word/id/tf/df/dl, per-row Okapi
-        contribution column) from a :meth:`_bm25_scan` result.
-        ``doclens is None`` means dl rides the postings row (round-9
-        layout) and no length-norm join is needed."""
-        hits, doclens, n_docs, avgdl = scan
+        contribution column) from a :meth:`_bm25_scan` result."""
+        hits, n_docs, avgdl = scan
         dfs = hits.groupBy("word").agg(
             F.count(F.lit(1)).cast("double").alias("df")
         )
         scored = hits.join(F.broadcast(dfs), "word")
-        if doclens is not None:
-            scored = scored.join(doclens, "id")
         idf = F.log(
             1 + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
         )

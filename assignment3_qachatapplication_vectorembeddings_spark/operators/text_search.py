@@ -37,13 +37,12 @@ __all__ = [
     "rrf_fuse",
     "rank_by",
     "StaleIndexError",
-    "text_index_stats",
 ]
 
 
 class StaleIndexError(RuntimeError):
-    """A persisted index sidecar was built from an older data snapshot
-    than the one the caller is serving (see ``expect_data_version``)."""
+    """A persisted derived index was built from an older data snapshot
+    than the one the caller is serving (see ``index_sync``)."""
 
 # The materialized-intermediate registry lives in runtime.py (it is
 # shared with the dedup checkpoints, not bm25-private); release_caches
@@ -185,11 +184,8 @@ def rank_by(df: DataFrame, order: Sequence[Column], *, out: str = "rank") -> Dat
 
 
 # --------------------------------------------------------------------------
-# Persisted inverted index — the text-side sibling of the persisted
-# IVFPQ layout in operators/ann.py: postings land partitioned by a
-# stable hash bucket of the term, so a query prunes to its terms'
-# bucket directories at PLANNING time and reads only their postings
-# (plus the doc-length sidecar rows it matches), never the corpus.
+# Shared with the persisted inverted index (``index_sync.SyncedTextIndex``),
+# whose postings land partitioned by a stable hash bucket of the term.
 # --------------------------------------------------------------------------
 
 
@@ -202,151 +198,3 @@ def _term_bucket(c: Column, n: int) -> Column:
 #: bump when ``tokens_expr`` changes — queries against an index built
 #: with a different tokenizer would silently mis-match terms.
 TOKENIZER_VERSION = "whitespace-lower/v1"
-
-
-def build_text_index(
-    docs: DataFrame,
-    path: str,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    buckets: int = 64,
-    data_version: int | None = None,
-) -> None:
-    """Materialize an inverted index at ``path``:
-
-    - ``postings/`` — (word, doc_id, tf) parquet partitioned by
-      ``bucket = hash(word) % buckets`` (one explode + one
-      map-side-combined aggregation over the corpus);
-    - ``doclens/`` — (doc_id, dl) sidecar for BM25 length norms;
-    - ``stats/`` — a 1-row (n_docs, avgdl, buckets, tokenizer,
-      data_version) table. ``buckets`` and ``tokenizer`` are
-      authoritative: queries read them back instead of trusting a
-      caller default (a mismatched bucket count would silently prune
-      to the wrong partition directories). ``data_version`` records
-      the VectorIndex manifest version the index was built from
-      (NULL for a free-standing build) so the serving path can detect
-      a stale sidecar after an upsert/delete commit.
-
-    Tokenization is ``tokens_expr`` — the exact expression
-    ``bm25_scores`` counts with, so index-served scores reproduce the
-    in-plan scorer's.
-    """
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"), tokens_expr(F.col(text_col)).alias("ws")
-    )
-    doclens = toks.select("doc_id", F.size("ws").cast("double").alias("dl"))
-    doclens.write.mode("overwrite").parquet(f"{path}/doclens")
-    postings = (
-        toks.select("doc_id", F.explode("ws").alias("word"))
-        .groupBy("word", "doc_id")
-        .agg(F.count(F.lit(1)).cast("double").alias("tf"))
-        .withColumn("bucket", _term_bucket(F.col("word"), buckets))
-    )
-    (
-        postings.repartition("bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{path}/postings")
-    )
-    stats = doclens.agg(
-        F.count(F.lit(1)).cast("double").alias("n_docs"),
-        F.avg("dl").alias("avgdl"),
-    ).select(
-        "*",
-        F.lit(buckets).cast("int").alias("buckets"),
-        F.lit(TOKENIZER_VERSION).alias("tokenizer"),
-        F.lit(data_version).cast("long").alias("data_version"),
-    )
-    stats.coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
-
-
-def text_index_stats(spark, path: str) -> dict:
-    """Read the index's authoritative stats row (n_docs, avgdl,
-    buckets, tokenizer, data_version) as a plain dict. Pre-round-5
-    indexes without the layout columns get the historical defaults."""
-    row = spark.read.parquet(f"{path}/stats").first().asDict()
-    row.setdefault("buckets", 64)
-    row.setdefault("tokenizer", TOKENIZER_VERSION)
-    row.setdefault("data_version", None)
-    if row["buckets"] is None:
-        row["buckets"] = 64
-    return row
-
-
-def text_index_bm25(
-    spark,
-    path: str,
-    terms: Sequence[str],
-    *,
-    buckets: int | None = None,
-    k1: float = 1.2,
-    b: float = 0.75,
-    expect_data_version: int | None = None,
-) -> DataFrame:
-    """BM25 over the persisted index: reads ONLY the query terms'
-    bucket partitions (PartitionFilters prune the rest), aggregates df
-    from those postings, joins the doc-length sidecar on the matched
-    docs, and scores with the same Okapi form as ``bm25_scores``.
-    Returns (doc_id, score) for documents matching ≥1 term.
-
-    The bucket count and tokenizer version are read from the stats
-    sidecar written at build time — a caller-supplied ``buckets`` is
-    only validated against it (a silent mismatch used to prune to the
-    wrong partition directories and return empty/partial results).
-    ``expect_data_version`` enables the staleness contract: pass the
-    current VectorIndex manifest version and the query fails fast with
-    ``StaleIndexError`` instead of serving results built from an older
-    snapshot."""
-    terms = list(dict.fromkeys(t for t in terms if t))
-    if not terms:
-        raise ValueError("text_index_bm25 requires at least one term")
-    stats_row = text_index_stats(spark, path)
-    if buckets is not None and buckets != stats_row["buckets"]:
-        raise ValueError(
-            f"text_index_bm25: caller buckets={buckets} does not match the "
-            f"index's built layout buckets={stats_row['buckets']} at {path}"
-        )
-    buckets = int(stats_row["buckets"])
-    if stats_row["tokenizer"] != TOKENIZER_VERSION:
-        raise ValueError(
-            f"text index at {path} was built with tokenizer "
-            f"{stats_row['tokenizer']!r}; this engine is {TOKENIZER_VERSION!r}"
-        )
-    if (
-        expect_data_version is not None
-        and stats_row["data_version"] != expect_data_version
-    ):
-        raise StaleIndexError(
-            f"text index at {path} was built from data_version="
-            f"{stats_row['data_version']}, but the current snapshot is "
-            f"{expect_data_version}; rebuild with build_text_index"
-        )
-    postings = spark.read.parquet(f"{path}/postings")
-    # client-side bucket hash (parity-pinned xxhash64 twin — the same
-    # helper index_sync serves with): the createDataFrame+collect this
-    # replaces paid one Spark job per query just to hash the terms
-    from ..functions.hashing import term_bucket as py_term_bucket
-
-    want_buckets = {py_term_bucket(t, buckets) for t in terms}
-    hits = postings.where(
-        F.col("bucket").isin(list(want_buckets)) & F.col("word").isin(terms)
-    )
-    dfs = hits.groupBy("word").agg(F.count(F.lit(1)).cast("double").alias("df"))
-    stats = spark.read.parquet(f"{path}/stats").select("n_docs", "avgdl")
-    doclens = spark.read.parquet(f"{path}/doclens")
-    scored = (
-        hits.join(F.broadcast(dfs), "word")
-        .crossJoin(F.broadcast(stats))
-        .join(doclens, "doc_id")
-    )
-    idf = F.log(1 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    contrib = idf * (
-        F.col("tf") * (k1 + 1)
-        / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl")))
-    )
-    return (
-        scored.select("doc_id", contrib.alias("c"))
-        .groupBy("doc_id")
-        .agg(F.sum("c").alias("score"))
-    )

@@ -748,7 +748,7 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = minhash_lsh_pairs(
-        docs, n=3, num_hashes=16, rows_per_band=4, threshold=0.8, hash_mode="md5"
+        docs, n=3, num_hashes=16, rows_per_band=4, threshold=0.8
     )
     return pairs.select(
         "doc_a", "doc_b", F.round("jaccard", 4).alias("jaccard")
@@ -812,7 +812,7 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import simhash_table
 
     docs = load_table(spark, sf_dir, "documents")
-    return simhash_table(docs, bits=60, hash_mode="md5")
+    return simhash_table(docs, bits=60)
 
 
 _SQL_SIMHASH = _SIMHASH_CTE + "SELECT doc_id, simhash FROM simh"
@@ -822,7 +822,7 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import simhash_pairs
 
     docs = load_table(spark, sf_dir, "documents")
-    return simhash_pairs(docs, bits=60, max_distance=4, hash_mode="md5")
+    return simhash_pairs(docs, bits=60, max_distance=4)
 
 
 # oracle is the brute-force cross join; the Spark plan is the banded join,
@@ -5913,10 +5913,10 @@ FROM rounded ORDER BY doc_id
 # and Dolma): word-count bounds, mean-word-length bounds, type-token
 # ratio, and repeated-bigram coverage. Everything except the top-bigram
 # count is per-ROW array math (zero shuffles, whole-stage codegen); the
-# bigram mode is a per-row fold over the sorted bigram array (no
-# explode, no join). Per-doc ratios are rounded then summed as exact
-# decimals so per-source averages are order-independent (same idiom as
-# BM25/unigram_logprob).
+# top-bigram count is an Arrow-batched pandas UDF over each doc's
+# token array (no explode, no join). Per-doc ratios are rounded then
+# summed as exact decimals so per-source averages are order-independent
+# (same idiom as BM25/unigram_logprob).
 # --------------------------------------------------------------------------
 
 

@@ -506,7 +506,7 @@ def test_simhash_whitespace_edges_match_duckdb_oracle(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
         r["doc_id"]: r["simhash"]
-        for r in simhash_table(docs, bits=60, hash_mode="md5").collect()
+        for r in simhash_table(docs, bits=60).collect()
     }
     con = duckdb.connect()
     con.execute("CREATE TABLE documents AS SELECT * FROM (VALUES "

@@ -143,6 +143,42 @@ def test_deep_mode_catches_served_primary_divergence(tree, spark):
     assert any("served id-set != primary" in e for e in rep["errors"])
 
 
+def test_foreign_format_and_revoked_less_metas_are_errors(tree):
+    """Each derived index has one on-disk format: fsck reports a meta
+    with a missing or foreign ``format`` as an error that says to
+    rebuild, and a meta without a ``revoked`` map as corrupt."""
+    import json as _json
+
+    _, ann, tix = tree
+    for idx in (ann, tix):
+        meta = idx._load_meta()
+        forged = [
+            {k: v for k, v in meta.items() if k != "format"},
+            dict(meta, format=idx.FORMAT + 1),
+            {k: v for k, v in meta.items() if k != "revoked"},
+        ]
+        first = meta["meta_version"] + 1
+        for v, payload in enumerate(forged, start=first):
+            assert idx.vindex._create_exclusive(
+                f"{idx.meta_dir}/{idx._meta_name(v)}",
+                _json.dumps(payload).encode(),
+            )
+        errors = fsck_derived(idx)["errors"]
+        assert any(
+            f"meta v{first} has format None" in e and "rebuild" in e
+            for e in errors
+        ), errors
+        assert any(
+            f"meta v{first + 1} has format {idx.FORMAT + 1}" in e
+            and "rebuild" in e
+            for e in errors
+        ), errors
+        assert any(
+            f"meta v{first + 2} has no usable 'revoked' map" in e
+            for e in errors
+        ), errors
+
+
 def test_cli_fsck_subcommand(tree, capsys):
     import json as _json
 
