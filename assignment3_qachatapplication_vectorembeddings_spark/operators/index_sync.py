@@ -1712,12 +1712,12 @@ class SyncedTextIndex(_SyncedIndexBase):
         ]
 
     def _write_segment(
-        self, titles: Sequence[str] | None, segment: str, reader=None
+        self, titles: Sequence[str] | None, segment: str, read, buckets: int
     ) -> dict:
-        """Encode ``titles`` (None = all live) into ``segment`` in ONE
+        """Encode ``titles`` (None = all live) from the snapshot reader
+        ``read`` into ``segment``, term-bucketed ``buckets`` ways, in ONE
         write action and ONE tokenize pass; returns {title: [n_docs,
         n_dl, sum_dl]} for the meta."""
-        read = reader if reader is not None else self.vindex.read
         rows = read(
             titles=None if titles is None else list(titles)
         ).select("id", "title", "text")
@@ -1760,7 +1760,7 @@ class SyncedTextIndex(_SyncedIndexBase):
                 "dl",
                 F.when(
                     F.col("word").isNotNull(),
-                    _term_bucket(F.col("word"), self.buckets),
+                    _term_bucket(F.col("word"), buckets),
                 )
                 .otherwise(F.lit(-1))
                 .alias("bucket"),
@@ -1815,7 +1815,7 @@ class SyncedTextIndex(_SyncedIndexBase):
     def build(self) -> dict:
         with self._pinned_source() as (version, parts, snap):
             seg = self._new_segment(version)
-            title_stats = self._write_segment(None, seg, reader=snap.read)
+            title_stats = self._write_segment(None, seg, snap.read, self.buckets)
         m = self._load_meta()
         meta = {
             "data_version": version,
@@ -1843,7 +1843,11 @@ class SyncedTextIndex(_SyncedIndexBase):
             if changed:
                 seg = self._new_segment(cur_version)
                 title_stats.update(
-                    self._write_segment(changed, seg, reader=snap.read)
+                    # the built bucket count, not this handle's: bm25
+                    # prunes by the meta's value
+                    self._write_segment(
+                        changed, seg, snap.read, int(m["buckets"])
+                    )
                 )
                 for t in changed:
                     assign[t] = seg
@@ -1880,7 +1884,9 @@ class SyncedTextIndex(_SyncedIndexBase):
                     "refresh() before compact()"
                 )
             seg = self._new_segment(m["data_version"])
-            title_stats = self._write_segment(live, seg, reader=snap.read)
+            title_stats = self._write_segment(
+                live, seg, snap.read, int(m["buckets"])
+            )
         meta = dict(
             m,
             assign={t: seg for t in live},

@@ -316,30 +316,6 @@ def test_bm25_title_filter_matches_inplan(tix, vindex):
     assert tix.bm25(terms, titles=["nope"]).count() == 0
 
 
-def test_bm25_empty_terms_rejected(tix):
-    with pytest.raises(ValueError, match="at least one term"):
-        tix.bm25(["", ""])
-
-
-def test_bm25_buckets_come_from_meta(tix, vindex):
-    """The bucket count the index was built with is authoritative: a
-    handle opened with a different ``buckets`` still prunes to the
-    right partition dirs and serves the in-plan scorer's scores."""
-    from assignment3_qachatapplication_vectorembeddings_spark.operators.text_search import (
-        bm25_scores,
-    )
-
-    terms = ["spark", "join", "about"]
-    other = SyncedTextIndex(vindex, tix.path, buckets=32)
-    served = _scores(other.bm25(terms))
-    inplan = _scores(
-        bm25_scores(vindex.read(), terms, id_col="id", text_col="text")
-    )
-    assert set(served) == set(inplan) and served
-    for i, s in inplan.items():
-        assert abs(served[i] - s) < 1e-9 * max(1.0, abs(s))
-
-
 def _publish_raw_meta(idx, payload: dict) -> None:
     """Write the next meta file as-is, bypassing ``_publish_meta``'s
     format stamp — how an index written by another engine version
