@@ -34,50 +34,33 @@ CLI: ``python -m assignment3_qachatapplication_vectorembeddings_spark.cli fsck
 
 from __future__ import annotations
 
-import json
 from datetime import datetime, timezone
 
 __all__ = ["fsck_primary", "fsck_derived"]
 
 
-def _parse_json(raw: bytes | None) -> dict | None:
-    if raw is None:
-        return None
-    try:
-        return json.loads(raw)
-    except ValueError:
-        return None
-
-
-def _check_leases(vindex, lease_dir: str, report: dict) -> None:
+def _check_leases(vlog, report: dict) -> None:
     now = datetime.now(timezone.utc)
     live = expired = torn = 0
-    for name in vindex._list_dir(lease_dir):
-        if not name.endswith(".json"):
-            continue
-        payload = _parse_json(vindex._read_small_file(f"{lease_dir}/{name}"))
-        if payload is None:
+    for _name, _version, expires in vlog.read_leases():
+        if expires is None:
             torn += 1  # torn lease write: never blocks vacuum, not an error
-            continue
-        try:
-            if datetime.fromisoformat(payload["expires_utc"]) < now:
-                expired += 1
-            else:
-                live += 1
-        except Exception:
-            torn += 1
+        elif expires < now:
+            expired += 1
+        else:
+            live += 1
     report["info"]["leases"] = {"live": live, "expired": expired, "torn": torn}
     if expired:
         report["warnings"].append(
-            f"{expired} expired lease file(s) at {lease_dir} (gc'd on the "
-            "next lease listing; harmless)"
+            f"{expired} expired lease file(s) at {vlog.lease_dir} (gc'd on "
+            "the next lease listing; harmless)"
         )
 
 
 def fsck_primary(vindex, *, deep: bool = False) -> dict:
     """Verify a :class:`~.index_maintenance.VectorIndex` tree."""
     report: dict = {"path": vindex.path, "errors": [], "warnings": [], "info": {}}
-    versions = vindex._manifest_versions()
+    versions = vindex._vlog.versions()
     report["info"]["manifest_versions"] = len(versions)
     if not versions:
         report["info"]["exists"] = False
@@ -89,11 +72,7 @@ def fsck_primary(vindex, *, deep: bool = False) -> dict:
     }
     complete: dict[int, dict] = {}
     for v in versions:
-        payload = _parse_json(
-            vindex._read_small_file(
-                f"{vindex.manifest_dir}/{vindex._manifest_name(v)}"
-            )
-        )
+        payload = vindex._vlog.read(v)
         if payload is None or payload.get("complete") is not True:
             # only the NEWEST version may legitimately be mid-write
             if v != versions[-1]:
@@ -145,7 +124,7 @@ def fsck_primary(vindex, *, deep: bool = False) -> dict:
                 "manifest (in-flight commit or vacuum fodder), e.g. "
                 f"{orphans[:3]}"
             )
-    _check_leases(vindex, vindex.lease_dir, report)
+    _check_leases(vindex._vlog, report)
 
     if deep and complete:
         v = max(complete)
@@ -186,7 +165,7 @@ def fsck_derived(index, *, deep: bool = False) -> dict:
         "warnings": [],
         "info": {},
     }
-    versions = index._meta_versions()
+    versions = index._vlog.versions()
     report["info"]["meta_versions"] = len(versions)
     if not versions:
         report["info"]["exists"] = False
@@ -196,9 +175,7 @@ def fsck_derived(index, *, deep: bool = False) -> dict:
     listing = set(vindex._list_dir(index.path))
     metas: dict[int, dict] = {}
     for v in versions:
-        payload = _parse_json(
-            vindex._read_small_file(f"{index.meta_dir}/{index._meta_name(v)}")
-        )
+        payload = index._vlog.read(v)
         if payload is None:
             if v == versions[-1] and len(versions) > 1:
                 report["warnings"].append(
@@ -272,7 +249,7 @@ def fsck_derived(index, *, deep: bool = False) -> dict:
                 f"drift guard is flagging retrain_recommended "
                 f"(drift_ratio {head.get('drift_ratio')}) — run retrain()"
             )
-        if vindex._load_manifest_version(head["data_version"]) is None:
+        if vindex._vlog.load(head["data_version"]) is None:
             report["warnings"].append(
                 f"indexed primary snapshot v{head['data_version']} has been "
                 "vacuumed — exact re-rank serves will fail loudly until "
@@ -298,11 +275,11 @@ def fsck_derived(index, *, deep: bool = False) -> dict:
                 f"{len(orphans)} unreferenced segment/quantizer dir(s) "
                 f"(in-flight writer or vacuum fodder), e.g. {orphans[:3]}"
             )
-    _check_leases(vindex, index.lease_dir, report)
+    _check_leases(index._vlog, report)
 
     if deep and metas:
         head = metas[max(metas)]
-        payload = vindex._load_manifest_version(head["data_version"])
+        payload = vindex._vlog.load(head["data_version"])
         if payload is not None:
             # id-set parity as distributed anti-joins: only counts plus a
             # bounded divergence sample ever reach the driver, so deep

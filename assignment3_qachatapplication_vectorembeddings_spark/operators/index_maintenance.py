@@ -67,6 +67,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..schemas import FORM_CATALOG_SCHEMA, INDEX_SCHEMA
+from .snapshot_log import VersionLog
 
 __all__ = [
     "ConcurrentCommitError",
@@ -113,7 +114,7 @@ class PinnedSnapshot:
         self.version = version
 
     def read(self, titles: Sequence[str] | None = None) -> DataFrame:
-        payload = self.index._load_manifest_version(self.version)
+        payload = self.index._vlog.load(self.version)
         if payload is None:
             raise SnapshotExpiredError(
                 f"manifest v{self.version} at {self.index.path} has been "
@@ -181,8 +182,18 @@ class VectorIndex:
     ):
         self.spark = spark
         self.path = path.rstrip("/")
-        self.manifest_dir = f"{self.path}/_manifest"
         self.lock_path = self.path + "__lock"
+        #: the manifest commit log: a manifest is usable once its
+        #: trailing ``"complete"`` sentinel (written last) parses
+        self._vlog = VersionLog(
+            self,
+            f"{self.path}/_manifest",
+            f"{self.path}/_leases",
+            version_key="version",
+            accept=lambda payload: payload.get("complete") is True,
+            conflict_error=ConcurrentCommitError,
+            expired_error=SnapshotExpiredError,
+        )
         #: conditional-put hook for object stores without atomic
         #: create: (absolute path, content) -> True iff the object was
         #: created and did NOT exist (S3 PutObject If-None-Match: *).
@@ -423,63 +434,7 @@ class VectorIndex:
             self._lock_tls.held = False
             self._unlock()
 
-    # -- manifest commit log ----------------------------------------------
-
-    @staticmethod
-    def _manifest_name(version: int) -> str:
-        return f"v{version:020d}.json"
-
-    def _manifest_versions(self) -> list[int]:
-        out = []
-        for name in self._list_dir(self.manifest_dir):
-            if name.startswith("v") and name.endswith(".json"):
-                with contextlib.suppress(ValueError):
-                    out.append(int(name[1:-5]))
-        return sorted(out)
-
-    def _load_manifest(self) -> tuple[int, dict] | None:
-        """Highest COMPLETE manifest, or None (no index). A manifest
-        mid-write by a concurrent committer parses as incomplete (the
-        trailing ``"complete"`` sentinel is written last), and the
-        reader falls back one version — that fallback IS the snapshot
-        isolation: v(N+1) becomes visible only once fully durable.
-
-        Complete manifests are immutable (create-if-absent, never
-        rewritten), so their PARSE is cached per instance keyed by
-        version: the manifest is O(titles) JSON, and without the cache
-        every serving query on a long-lived handle re-parses it just to
-        learn the version didn't move. The cache is consulted only for
-        versions present in the CURRENT listing, so a vacuumed version
-        can never be served from memory. Returns a DEEP COPY per call:
-        the cache holds the canonical parse, and a caller mutating
-        ``payload['partitions']`` in place gets a private copy instead
-        of silently poisoning every later read on this handle (the
-        copy is O(titles) dict work — the expensive part the cache
-        saves is the store read, not the copy)."""
-        import copy
-
-        cache = getattr(self, "_manifest_parse_cache", None)
-        if cache is None:
-            cache = self._manifest_parse_cache = {}
-        for version in reversed(self._manifest_versions()):
-            hit = cache.get(version)
-            if hit is not None:
-                return version, copy.deepcopy(hit)
-            data = self._read_small_file(
-                f"{self.manifest_dir}/{self._manifest_name(version)}"
-            )
-            if data is None:
-                continue
-            try:
-                payload = json.loads(data)
-            except ValueError:
-                continue
-            if payload.get("complete") is True:
-                cache[version] = payload
-                for v in sorted(cache)[:-4]:  # bound: the live tail
-                    del cache[v]
-                return version, copy.deepcopy(payload)
-        return None
+    # -- manifest commit log (see VersionLog) ------------------------------
 
     #: sentinel: "carry the current manifest's dim stamp forward"
     _KEEP_DIM = object()
@@ -514,8 +469,8 @@ class VectorIndex:
             row_counts = self._manifest_row_counts()
             row_count_bounds = self._manifest_count_bounds()
         if dim is self._KEEP_DIM:
-            m = self._load_manifest()
-            dim = None if m is None else m[1].get("dim")
+            m = self._vlog.latest()
+            dim = None if m is None else m.get("dim")
         row_counts = {t: int(n) for t, n in row_counts.items() if t in partitions}
         bounds_list = sorted(
             t for t in (row_count_bounds or set()) if t in row_counts
@@ -532,20 +487,14 @@ class VectorIndex:
             # manifest cannot parse to complete=true
             "complete": True,
         }
-        target = f"{self.manifest_dir}/{self._manifest_name(version)}"
-        if not self._create_exclusive(target, json.dumps(payload).encode()):
-            raise ConcurrentCommitError(
-                f"manifest v{version} already exists at {self.manifest_dir} "
-                "— concurrent commit detected; retry the mutation"
-            )
+        self._vlog.publish(version, json.dumps(payload).encode())
 
     def _state(self) -> tuple[int, dict[str, str], dict[str, str]]:
         """(version, title→generation dir, form→recent_activity iso)."""
-        m = self._load_manifest()
+        m = self._vlog.latest()
         if m is None:
             return 0, {}, {}
-        version, payload = m
-        return version, dict(payload["partitions"]), dict(payload["catalog"])
+        return m["version"], m["partitions"], m["catalog"]
 
     def _manifest_row_counts(self) -> dict[str, int]:
         """title → live row count stamp from the current manifest
@@ -556,17 +505,17 @@ class VectorIndex:
         bound (replace churn adds the batch size without subtracting
         replaced rows; re-anchored when it matters — see
         ``_write_generation``)."""
-        m = self._load_manifest()
+        m = self._vlog.latest()
         if m is None:
             return {}
-        return dict(m[1].get("row_counts", {}))
+        return m.get("row_counts", {})
 
     def _manifest_count_bounds(self) -> set[str]:
         """Titles whose row-count stamp is an upper bound, not exact."""
-        m = self._load_manifest()
+        m = self._vlog.latest()
         if m is None:
             return set()
-        return set(m[1].get("row_count_bounds", []))
+        return set(m.get("row_count_bounds", []))
 
     def _new_generation(self, version: int) -> str:
         # the nonce keeps a fenced-off loser's directory from colliding
@@ -670,7 +619,7 @@ class VectorIndex:
     # -- reads (snapshot-isolated) ----------------------------------------
 
     def exists(self) -> bool:
-        return self._load_manifest() is not None
+        return self._vlog.latest() is not None
 
     def _empty(self) -> DataFrame:
         return self.spark.createDataFrame([], INDEX_SCHEMA)
@@ -681,7 +630,7 @@ class VectorIndex:
         stays consistent while writers commit (until vacuum passes the
         retention window). ``titles`` prunes driver-side before any
         scan is planned (the reference's ``$in`` metadata filter)."""
-        m = self._load_manifest()
+        m = self._vlog.latest()
         if m is None:
             return self._empty()
         # per-generation scan restricted to the titles the manifest
@@ -690,15 +639,15 @@ class VectorIndex:
         # titles' files in the same generation are never read; the
         # title cast happens BEFORE the isin so "007" never prunes as 7
         # (shared body with leased reads — _read_manifest_payload)
-        return self._read_manifest_payload(m[1], titles)
+        return self._read_manifest_payload(m, titles)
 
     def read_catalog(self) -> DataFrame:
-        m = self._load_manifest()
+        m = self._vlog.latest()
         if m is None:
             return self.spark.createDataFrame([], FORM_CATALOG_SCHEMA)
         rows = [
             (form, datetime.fromisoformat(ts))
-            for form, ts in sorted(m[1]["catalog"].items())
+            for form, ts in sorted(m["catalog"].items())
         ]
         if not rows:
             return self.spark.createDataFrame([], FORM_CATALOG_SCHEMA)
@@ -710,10 +659,10 @@ class VectorIndex:
         upsert) — zero Spark jobs on the steady path; a manifest
         without a stamp (mixed-dimension first batch) falls back to the
         original data probe."""
-        m = self._load_manifest()
-        if m is None or not m[1]["partitions"]:
+        m = self._vlog.latest()
+        if m is None or not m["partitions"]:
             return None
-        d = m[1].get("dim")
+        d = m.get("dim")
         if d is not None:
             return int(d)
         row = self.read().select(F.size("vector").alias("d")).head()
@@ -866,8 +815,8 @@ class VectorIndex:
 
     def form_check(self, form_name: str) -> bool:
         # manifest invariant: a title is mapped iff it has rows
-        m = self._load_manifest()
-        return m is not None and form_name in m[1]["partitions"]
+        m = self._vlog.latest()
+        return m is not None and form_name in m["partitions"]
 
     # -- S14: deletes ---------------------------------------------------------
 
@@ -1068,31 +1017,7 @@ class VectorIndex:
 
     @property
     def lease_dir(self) -> str:
-        return f"{self.path}/_leases"
-
-    def _unexpired_lease_versions(self) -> set[int]:
-        """Manifest versions pinned by a live (unexpired) reader lease.
-        Expired lease files are garbage-collected here — leaking a
-        lease (reader crash) costs at most its TTL of retention."""
-        now = datetime.now(timezone.utc)
-        pinned: set[int] = set()
-        for name in self._list_dir(self.lease_dir):
-            if not name.endswith(".json"):
-                continue
-            data = self._read_small_file(f"{self.lease_dir}/{name}")
-            if data is None:
-                continue
-            try:
-                payload = json.loads(data)
-                expires = datetime.fromisoformat(payload["expires_utc"])
-            except Exception:
-                continue  # torn lease write: ignore (never blocks vacuum)
-            if expires < now:
-                with contextlib.suppress(Exception):
-                    self._delete_path(f"{self.lease_dir}/{name}")
-                continue
-            pinned.add(int(payload["version"]))
-        return pinned
+        return self._vlog.lease_dir
 
     @contextlib.contextmanager
     def reader_lease(self, *, ttl_sec: float = 3600.0):
@@ -1103,63 +1028,10 @@ class VectorIndex:
         :class:`PinnedSnapshot`; the lease is released on exit. A
         reader outliving ``ttl_sec`` loses the guarantee (crash-safety:
         an orphaned lease self-expires) — re-acquire before then, or
-        expect :class:`SnapshotExpiredError` / a failed scan.
-
-        Pin-then-verify (round 6, mirroring the derived-index lease):
-        after the lease file lands, the pinned version must still be
-        listed — a zero-slack vacuum racing the load-to-lease window
-        could have reclaimed it; a lost race releases and re-pins the
-        then-newest manifest, bounded retries then a loud error."""
-        target = None
-        try:
-            for _attempt in range(3):
-                m = self._load_manifest()
-                if m is None:
-                    raise SnapshotExpiredError(
-                        f"no committed snapshot at {self.path}"
-                    )
-                version = m[0]
-                lease_id = uuid.uuid4().hex[:12]
-                target = f"{self.lease_dir}/v{version:020d}-{lease_id}.json"
-                expires = datetime.now(timezone.utc).timestamp() + ttl_sec
-                payload = {
-                    "version": version,
-                    "expires_utc": datetime.fromtimestamp(
-                        expires, tz=timezone.utc
-                    ).isoformat(),
-                }
-                if not self._create_exclusive(target, json.dumps(payload).encode()):
-                    # collision means ANOTHER holder owns that file —
-                    # clear target so the finally can't delete it
-                    collided, target = target, None
-                    raise RuntimeError(f"lease file collision at {collided}")
-                if version in self._manifest_versions():
-                    break  # pinned AND still live: vacuum now retains it
-                with contextlib.suppress(Exception):
-                    self._delete_path(target)
-                target = None
-            else:
-                raise SnapshotExpiredError(
-                    f"could not pin a live manifest at {self.path}: every "
-                    "candidate was vacuumed before the lease landed"
-                )
-            yield PinnedSnapshot(self, version)
-        finally:
-            if target is not None:
-                with contextlib.suppress(Exception):
-                    self._delete_path(target)
-
-    def _load_manifest_version(self, version: int) -> dict | None:
-        data = self._read_small_file(
-            f"{self.manifest_dir}/{self._manifest_name(version)}"
-        )
-        if data is None:
-            return None
-        with contextlib.suppress(Exception):
-            payload = json.loads(data)
-            if payload.get("complete"):
-                return payload
-        return None
+        expect :class:`SnapshotExpiredError` / a failed scan. The pin
+        is verified against a racing vacuum (:class:`VersionLog`)."""
+        with self._vlog.lease(ttl_sec) as m:
+            yield PinnedSnapshot(self, m["version"])
 
     def _read_manifest_payload(self, payload: dict, titles=None) -> DataFrame:
         """Frames for an explicit manifest payload (the shared body of
@@ -1197,58 +1069,20 @@ class VectorIndex:
         self, *, keep_versions: int = 2, min_age_sec: float = 600.0
     ) -> dict:
         """Reclaim generations referenced by none of the RETAINED
-        manifests, and drop the other manifests. Retention now
-        ENFORCES the reader contract (round-4 verdict gap #2) instead
-        of documenting it:
-
-        - the newest ``keep_versions`` manifests are always retained;
-        - a superseded manifest stays retained until its SUCCESSOR has
-          been committed for at least ``min_age_sec`` — a reader that
-          resolved the manifest just before a commit has that long to
-          finish or take a lease (table-format minimum-age VACUUM);
-        - any manifest pinned by an unexpired :meth:`reader_lease` is
-          retained regardless of age, so leased readers always either
-          complete or outlive their own TTL.
-
-        Runs under the writer lock."""
-        if keep_versions < 1:
-            raise ValueError("keep_versions must be >= 1")
+        manifests, and drop the other manifests. Retention ENFORCES the
+        reader contract: the newest ``keep_versions`` manifests, any
+        manifest pinned by an unexpired :meth:`reader_lease`, and any
+        superseded manifest whose successor is younger than
+        ``min_age_sec`` are retained (:class:`VersionLog`). Runs under
+        the writer lock."""
         with self.write_lock():
-            versions = self._manifest_versions()
-            retained = set(versions[-keep_versions:])
-            retained |= self._unexpired_lease_versions() & set(versions)
-            if min_age_sec > 0:
-                now = datetime.now(timezone.utc)
-                committed: dict[int, datetime] = {}
-                for v in versions:
-                    payload = self._load_manifest_version(v)
-                    if payload and "committed_utc" in payload:
-                        with contextlib.suppress(Exception):
-                            committed[v] = datetime.fromisoformat(
-                                payload["committed_utc"]
-                            )
-                for i, v in enumerate(versions[:-1]):
-                    successor = versions[i + 1]
-                    t = committed.get(successor)
-                    if t is None or (now - t).total_seconds() < min_age_sec:
-                        retained.add(v)
+            retained, removed = self._vlog.vacuum(
+                keep_versions=keep_versions, min_age_sec=min_age_sec
+            )
             referenced: set[str] = set()
-            for v in sorted(retained):
-                data = self._read_small_file(
-                    f"{self.manifest_dir}/{self._manifest_name(v)}"
-                )
+            for m in retained.values():
                 with contextlib.suppress(Exception):
-                    referenced.update(json.loads(data)["partitions"].values())
-            # manifests BEFORE data dirs: reader_lease's pin-then-verify
-            # checks manifest presence, so this vacuum's decision must be
-            # observable before any generation it relies on disappears
-            removed_manifests = 0
-            for v in versions:
-                if v not in retained:
-                    self._delete_path(
-                        f"{self.manifest_dir}/{self._manifest_name(v)}"
-                    )
-                    removed_manifests += 1
+                    referenced.update(m["partitions"].values())
             removed_dirs = []
             for name in self._list_dir(f"{self.path}/data"):
                 rel = f"data/{name}"
@@ -1257,39 +1091,11 @@ class VectorIndex:
                     removed_dirs.append(rel)
             return {
                 "data_dirs_removed": removed_dirs,
-                "manifests_removed": removed_manifests,
+                "manifests_removed": removed,
                 "retained_versions": sorted(retained),
             }
 
     # -- J3/J4: catalog sync ---------------------------------------------------
-
-    def _catalog_add(self, form_names: Sequence[str]) -> None:
-        """Insert-if-absent (pipeline2.py:315-331) as a standalone
-        commit; inside upsert the add piggybacks on the data commit."""
-        if not form_names:
-            return
-        with self.write_lock():
-            version, parts, catalog = self._state()
-            now = datetime.now(timezone.utc).isoformat()
-            changed = False
-            for n in form_names:
-                if n not in catalog:
-                    catalog[n] = now
-                    changed = True
-            if changed:
-                self._publish_manifest(version + 1, parts, catalog)
-
-    def _catalog_remove(self, form_names: Sequence[str]) -> None:
-        if not form_names:
-            return
-        with self.write_lock():
-            version, parts, catalog = self._state()
-            changed = False
-            for n in form_names:
-                if catalog.pop(n, None) is not None:
-                    changed = True
-            if changed:
-                self._publish_manifest(version + 1, parts, catalog)
 
     def sync_catalog_orphans(self) -> list[str]:
         """J4: forms in the catalog with no surviving vectors → removed.

@@ -65,6 +65,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import term_bucket as py_term_bucket
 from .index_maintenance import VectorIndex
+from .snapshot_log import VersionLog
 from .text_search import (
     TOKENIZER_VERSION,
     StaleIndexError,
@@ -80,11 +81,11 @@ _log = logging.getLogger(__name__)
 class _SyncedIndexBase:
     """Meta-file plumbing shared by the ANN and text synced indexes.
 
-    Meta layout: ``{path}/_meta/v<0-padded>.json`` — append-only,
-    published create-if-absent (reusing the VectorIndex's filesystem
-    helpers, so the same atomic-create / conditional-put contract
-    applies). Readers resolve the highest complete meta once per
-    query — snapshot isolation for the index itself.
+    Meta layout: ``{path}/_meta/v<0-padded>.json``, a
+    :class:`VersionLog` over the VectorIndex's filesystem helpers (so
+    the same atomic-create / conditional-put contract applies).
+    Readers resolve the highest complete meta once per query —
+    snapshot isolation for the index itself.
 
     Every meta carries ``format``: the one on-disk layout this engine
     reads and writes. A meta with any other (or no) format is refused
@@ -101,62 +102,26 @@ class _SyncedIndexBase:
     def __init__(self, vindex: VectorIndex, path: str):
         self.vindex = vindex
         self.path = path.rstrip("/")
-        self.meta_dir = f"{self.path}/_meta"
+        self._vlog = VersionLog(
+            vindex,
+            f"{self.path}/_meta",
+            f"{self.path}/_meta_leases",
+            version_key="meta_version",
+            accept=self._accept_format,
+            conflict_error=RuntimeError,
+            expired_error=StaleIndexError,
+        )
 
     # -- meta commit log ----------------------------------------------------
 
-    @staticmethod
-    def _meta_name(version: int) -> str:
-        return f"v{version:020d}.json"
-
-    def _meta_versions(self) -> list[int]:
-        out = []
-        for name in self.vindex._list_dir(self.meta_dir):
-            if name.startswith("v") and name.endswith(".json"):
-                try:
-                    out.append(int(name[1:-5]))
-                except ValueError:
-                    continue
-        return sorted(out)
-
-    def _load_meta(self) -> dict | None:
-        # metas are immutable once published (create-if-absent), so the
-        # O(titles) JSON parse is cached per instance keyed by version —
-        # consulted only for versions in the CURRENT listing, so a
-        # vacuumed meta is never served from memory (the same contract
-        # as VectorIndex._load_manifest's parse cache). Returns a DEEP
-        # COPY per call so a caller mutating meta['assign'] in place
-        # gets a private copy, not a poisoned shared cache entry.
-        import copy
-
-        cache = getattr(self, "_meta_parse_cache", None)
-        if cache is None:
-            cache = self._meta_parse_cache = {}
-        for version in reversed(self._meta_versions()):
-            hit = cache.get(version)
-            if hit is not None:
-                return copy.deepcopy(hit)
-            data = self.vindex._read_small_file(
-                f"{self.meta_dir}/{self._meta_name(version)}"
+    def _accept_format(self, payload: dict) -> bool:
+        if payload.get("format") != self.FORMAT:
+            raise ValueError(
+                f"{self.KIND} index at {self.path} has meta format "
+                f"{payload.get('format')!r}; this engine reads only "
+                f"format {self.FORMAT} — rebuild it into a fresh path"
             )
-            if data is None:
-                continue
-            try:
-                payload = json.loads(data)
-            except ValueError:
-                continue  # torn write of the newest meta: fall back one
-            if payload.get("format") != self.FORMAT:
-                raise ValueError(
-                    f"{self.KIND} index at {self.path} has meta format "
-                    f"{payload.get('format')!r}; this engine reads only "
-                    f"format {self.FORMAT} — rebuild it into a fresh path"
-                )
-            payload["meta_version"] = version
-            cache[version] = payload
-            for v in sorted(cache)[:-4]:
-                del cache[v]
-            return copy.deepcopy(payload)
-        return None
+        return True
 
     def _publish_meta(self, version: int, payload: dict) -> None:
         # referenced segments must still exist at publish time: a
@@ -194,14 +159,7 @@ class _SyncedIndexBase:
             meta_version=version,
             committed_utc=datetime.now(timezone.utc).isoformat(),
         )
-        target = f"{self.meta_dir}/{self._meta_name(version)}"
-        if not self.vindex._create_exclusive(
-            target, json.dumps(payload, sort_keys=True).encode()
-        ):
-            raise RuntimeError(
-                f"derived-index meta v{version} already exists at "
-                f"{self.meta_dir} — concurrent refresh; retry"
-            )
+        self._vlog.publish(version, json.dumps(payload, sort_keys=True).encode())
 
     def _new_segment(self, data_version: int) -> str:
         # the creation timestamp is EMBEDDED in the name so vacuum's
@@ -232,15 +190,11 @@ class _SyncedIndexBase:
     # -- staleness contract -------------------------------------------------
 
     def exists(self) -> bool:
-        return self._load_meta() is not None
-
-    def indexed_data_version(self) -> int | None:
-        m = self._load_meta()
-        return None if m is None else m["data_version"]
+        return self._vlog.latest() is not None
 
     def is_stale(self) -> bool:
         """True iff the primary has committed past the indexed snapshot."""
-        m = self._load_meta()
+        m = self._vlog.latest()
         if m is None:
             return True
         cur_version, _parts = self.vindex.snapshot_info()
@@ -253,7 +207,7 @@ class _SyncedIndexBase:
         indexed (possibly older) snapshot explicitly."""
         if on_stale not in ("error", "refresh", "serve"):
             raise ValueError(f"on_stale must be error|refresh|serve, got {on_stale!r}")
-        m = self._load_meta()
+        m = self._vlog.latest()
         if m is None:
             raise StaleIndexError(
                 f"no {self.KIND} index built at {self.path}; call build()"
@@ -270,7 +224,7 @@ class _SyncedIndexBase:
                 "refresh() it or pass on_stale='refresh'/'serve'"
             )
         self.refresh()
-        return self._load_meta()
+        return self._vlog.latest()
 
     def _diff(
         self, meta: dict, cur_version: int, cur_parts: dict
@@ -297,7 +251,7 @@ class _SyncedIndexBase:
         between the title diff and the encode read — the diff and the
         rows are one snapshot by construction."""
         with self.vindex.reader_lease() as snap:
-            payload = self.vindex._load_manifest_version(snap.version)
+            payload = self.vindex._vlog.load(snap.version)
             if payload is None:
                 raise StaleIndexError(
                     f"primary manifest v{snap.version} vanished under "
@@ -309,108 +263,32 @@ class _SyncedIndexBase:
 
     @property
     def lease_dir(self) -> str:
-        return f"{self.path}/_meta_leases"
+        return self._vlog.lease_dir
 
-    def _leased_meta_versions(self) -> set[int]:
-        """Meta versions pinned by a live (unexpired) derived-index
-        reader lease; expired lease files are garbage-collected here —
-        same crash-safety stance as the primary's
-        ``_unexpired_lease_versions``."""
-        now = datetime.now(timezone.utc)
-        pinned: set[int] = set()
-        for name in self.vindex._list_dir(self.lease_dir):
-            if not name.endswith(".json"):
-                continue
-            data = self.vindex._read_small_file(f"{self.lease_dir}/{name}")
-            if data is None:
-                continue
-            try:
-                payload = json.loads(data)
-                expires = datetime.fromisoformat(payload["expires_utc"])
-            except Exception:
-                continue  # torn lease write: never blocks vacuum
-            if expires < now:
-                with contextlib.suppress(Exception):
-                    self.vindex._delete_path(f"{self.lease_dir}/{name}")
-                continue
-            pinned.add(int(payload["meta_version"]))
-        return pinned
-
-    @contextlib.contextmanager
     def reader_lease(self, *, ttl_sec: float = 3600.0):
         """Pin the NEWEST meta (and therefore every segment it
         references) for a long-running derived-index reader: while the
         lease file exists and is unexpired, :meth:`vacuum` retains the
         pinned meta version and its segments, so a query that resolved
         this meta completes across any number of concurrent
-        refresh+vacuum cycles. Yields the pinned meta dict (pass its
-        ``assign`` through :meth:`_segment_frames` / the serving
-        methods' internals). Mirrors ``VectorIndex.reader_lease``:
-        an orphaned lease self-expires after ``ttl_sec``.
-
-        Pin-then-verify closes the load-to-lease race: after the lease
-        file lands, the pinned version must still be listed (a
-        zero-slack concurrent vacuum could have reclaimed it in the
-        window); a lost race releases and re-pins the then-newest meta
-        — bounded retries, then a loud error."""
-        target = None
-        try:
-            for _attempt in range(3):
-                m = self._load_meta()
-                if m is None:
-                    raise StaleIndexError(
-                        f"no {self.KIND} index built at {self.path}; call build()"
-                    )
-                version = m["meta_version"]
-                lease_id = uuid.uuid4().hex[:12]
-                target = f"{self.lease_dir}/v{version:020d}-{lease_id}.json"
-                expires = datetime.now(timezone.utc).timestamp() + ttl_sec
-                payload = {
-                    "meta_version": version,
-                    "expires_utc": datetime.fromtimestamp(
-                        expires, tz=timezone.utc
-                    ).isoformat(),
-                }
-                if not self.vindex._create_exclusive(
-                    target, json.dumps(payload).encode()
-                ):
-                    # collision means ANOTHER holder owns that file —
-                    # clear target so the finally can't delete it
-                    collided, target = target, None
-                    raise RuntimeError(f"lease file collision at {collided}")
-                if version in self._meta_versions():
-                    break  # pinned AND still live: vacuum now retains it
-                with contextlib.suppress(Exception):
-                    self.vindex._delete_path(target)
-                target = None
-            else:
-                raise StaleIndexError(
-                    f"could not pin a live {self.KIND} meta at {self.path}: "
-                    "every candidate was vacuumed before the lease landed "
-                    "(zero-retention vacuum racing this reader?)"
-                )
-            yield m
-        finally:
-            if target is not None:
-                with contextlib.suppress(Exception):
-                    self.vindex._delete_path(target)
+        refresh+vacuum cycles. A context manager yielding the pinned
+        meta dict (pass its ``assign`` through :meth:`_segment_frames`
+        / the serving methods' internals); an orphaned lease
+        self-expires after ``ttl_sec``, and the pin is verified against
+        a racing vacuum (:class:`VersionLog`)."""
+        return self._vlog.lease(ttl_sec)
 
     def vacuum(
         self, *, keep_versions: int = 2, min_age_sec: float = 600.0
     ) -> list[str]:
-        """Delete segment dirs referenced by none of the RETAINED
-        metas, then drop the other metas — the primary vacuum's
-        retention contract, ported (round-5 verdict ask #2; the
-        reference's Pinecone never serves a torn index,
+        """Delete segment and quantizer dirs referenced by none of the
+        RETAINED metas, then drop the other metas (the reference's
+        Pinecone never serves a torn index,
         ``airflow-pipeline/dags/pipeline2.py:146`` — data+index are one
-        store there). Retained are:
-
-        - the newest ``keep_versions`` metas;
-        - any meta pinned by an unexpired :meth:`reader_lease`;
-        - any superseded meta whose SUCCESSOR has been committed for
-          less than ``min_age_sec`` (an unleased reader that resolved
-          it has that long to finish — table-format minimum-age
-          VACUUM, same stance as ``VectorIndex.vacuum``).
+        store there). Retained are the newest ``keep_versions`` metas,
+        any meta pinned by an unexpired :meth:`reader_lease`, and any
+        superseded meta whose successor is younger than
+        ``min_age_sec`` (:class:`VersionLog`).
 
         Two guards close the lockless write race (refresh/build/compact
         write their segment BEFORE publishing the meta that references
@@ -422,39 +300,16 @@ class _SyncedIndexBase:
         writer stalled longer than that between segment write and meta
         publish loses the segment and fails LOUDLY at publish —
         ``_publish_meta`` verifies every referenced segment still
-        exists — the same bounded-staleness bargain the primary's
-        min-age makes). Segment age compares the writer's embedded
-        wall clock against this vacuumer's clock: size ``min_age_sec``
-        with cross-host clock skew in mind (the default 600 s absorbs
-        any sane NTP drift)."""
-        if keep_versions < 1:
-            raise ValueError("keep_versions must be >= 1")
-        versions = self._meta_versions()
-        retained = set(versions[-keep_versions:])
-        retained |= self._leased_meta_versions() & set(versions)
-        metas: dict[int, dict] = {}
-        for v in versions:
-            data = self.vindex._read_small_file(
-                f"{self.meta_dir}/{self._meta_name(v)}"
-            )
-            if data:
-                with contextlib.suppress(ValueError):
-                    metas[v] = json.loads(data)
-        if min_age_sec > 0:
-            now = datetime.now(timezone.utc)
-            for i, v in enumerate(versions[:-1]):
-                succ = metas.get(versions[i + 1], {})
-                try:
-                    t = datetime.fromisoformat(succ["committed_utc"])
-                except Exception:
-                    retained.add(v)  # undatable successor: keep
-                    continue
-                if (now - t).total_seconds() < min_age_sec:
-                    retained.add(v)
+        exists). Segment age compares the writer's embedded wall clock
+        against this vacuumer's clock: size ``min_age_sec`` with
+        cross-host clock skew in mind (the default 600 s absorbs any
+        sane NTP drift)."""
+        retained, _removed = self._vlog.vacuum(
+            keep_versions=keep_versions, min_age_sec=min_age_sec
+        )
         referenced: set[str] = set()
         newest_data_version = -1
-        for v in retained:
-            m = metas.get(v)
+        for m in retained.values():
             if m:
                 referenced.update(m["assign"].values())
                 if m.get("quantizer_dir"):
@@ -467,14 +322,6 @@ class _SyncedIndexBase:
                 newest_data_version = max(
                     newest_data_version, int(m.get("data_version", -1))
                 )
-        # metas are deleted BEFORE their segments: a reader_lease's
-        # pin-then-verify checks meta presence, so the verify must
-        # observe this vacuum's decision before any segment it relies
-        # on can disappear — segments-first would let the verify pass
-        # while the (slow, recursive) segment deletion was in flight
-        for v in versions:
-            if v not in retained:
-                self.vindex._delete_path(f"{self.meta_dir}/{self._meta_name(v)}")
         removed = []
         for name in self.vindex._list_dir(self.path):
             if name in referenced:
@@ -590,7 +437,7 @@ class _SyncedIndexBase:
         ``pipeline2.py``): versions, segment layout, churn, and (for
         ANN) the drift signal. Driver-only: reads the meta, never the
         segments."""
-        m = self._load_meta()
+        m = self._vlog.latest()
         if m is None:
             return {"kind": self.KIND, "built": False}
         by_seg: dict[str, int] = {}
@@ -630,7 +477,7 @@ class _SyncedIndexBase:
         count. No-op (returns None) below both bounds or when the
         index is stale (refresh first; compacting decides on the same
         snapshot it encodes)."""
-        m = self._load_meta()
+        m = self._vlog.latest()
         if m is None:
             return None
         generations = {
@@ -918,7 +765,7 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
             baseline = self._recon_error(
                 self._baseline_slice(sample), centroids, codebooks
             )
-        m = self._load_meta()
+        m = self._vlog.latest()
         next_meta = 1 if m is None else m["meta_version"] + 1
         meta = {
             "data_version": version,
@@ -983,7 +830,7 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
             return self.build()
         from .ann import ivfpq_build
 
-        m = self._load_meta()
+        m = self._vlog.latest()
         if m is None:
             return self.build()
         want = sorted(set(titles) & set(m["assign"]))
@@ -1064,7 +911,7 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
         a ``drift_titles`` ledger present, only the drifted titles are
         re-encoded — O(drifted) instead of O(corpus); ``partial=False``
         forces the full rebuild."""
-        m = self._load_meta()
+        m = self._vlog.latest()
         if m is not None and m.get("retrain_recommended"):
             drifted = m.get("drift_titles")
             if partial and drifted:
@@ -1184,7 +1031,7 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
         from .topk import knn_join
 
         meta = self._resolve(on_stale)
-        payload = self.vindex._load_manifest_version(meta["data_version"])
+        payload = self.vindex._vlog.load(meta["data_version"])
         if payload is None:
             raise StaleIndexError(
                 f"primary manifest v{meta['data_version']} has been "
@@ -1297,7 +1144,7 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
         only) when the manifest moved without touching any title's
         rows (e.g. catalog-only commits). Runs under a primary reader
         lease: the diff and the encode see ONE snapshot."""
-        m = self._load_meta()
+        m = self._vlog.latest()
         if m is None:
             return self.build()
         drift_ratio = None
@@ -1381,7 +1228,7 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
         with the old data_version). Compacting a stale index is
         refused (refresh first) so the fold cannot silently advance
         data_version."""
-        m = self._load_meta()
+        m = self._vlog.latest()
         if m is None:
             raise StaleIndexError(f"no ivfpq index at {self.path}; call build()")
         live = sorted(m["assign"])
@@ -1510,7 +1357,7 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
             live = sorted(meta["assign"])
             if titles is not None:
                 live = sorted(set(titles) & set(live))
-            payload = self.vindex._load_manifest_version(meta["data_version"])
+            payload = self.vindex._vlog.load(meta["data_version"])
             if payload is None:
                 raise StaleIndexError(
                     f"primary manifest v{meta['data_version']} (the snapshot "
@@ -1590,7 +1437,7 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
             live = sorted(meta["assign"])
             if titles is not None:
                 live = sorted(set(titles) & set(live))
-            payload = self.vindex._load_manifest_version(meta["data_version"])
+            payload = self.vindex._vlog.load(meta["data_version"])
             if payload is None:
                 raise StaleIndexError(
                     f"primary manifest v{meta['data_version']} (the snapshot "
@@ -1816,7 +1663,7 @@ class SyncedTextIndex(_SyncedIndexBase):
         with self._pinned_source() as (version, parts, snap):
             seg = self._new_segment(version)
             title_stats = self._write_segment(None, seg, snap.read, self.buckets)
-        m = self._load_meta()
+        m = self._vlog.latest()
         meta = {
             "data_version": version,
             "base_parts": parts,
@@ -1831,7 +1678,7 @@ class SyncedTextIndex(_SyncedIndexBase):
         return meta
 
     def refresh(self) -> dict:
-        m = self._load_meta()
+        m = self._vlog.latest()
         if m is None:
             return self.build()
         with self._pinned_source() as (cur_version, cur_parts, snap):
@@ -1872,7 +1719,7 @@ class SyncedTextIndex(_SyncedIndexBase):
         sibling of :meth:`SyncedIvfpqIndex.compact`, same leased
         check-equals-read contract (the encode is pinned to the
         indexed snapshot; a stale index is refused)."""
-        m = self._load_meta()
+        m = self._vlog.latest()
         if m is None:
             raise StaleIndexError(f"no text index at {self.path}; call build()")
         live = sorted(m["assign"])

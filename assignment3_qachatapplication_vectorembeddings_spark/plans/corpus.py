@@ -149,10 +149,6 @@ def _dec2(c):  # exact money arithmetic: sum(decimal) is order-independent
     return c.cast("decimal(18,2)")
 
 
-def _dec4(c):
-    return c.cast("decimal(18,4)")
-
-
 def _cents_sum(c, scale: int = 2):
     """Exact money sum via scaled-integer ("cents") long aggregation,
     returned as DOUBLE.

@@ -144,7 +144,7 @@ def _run_chaos(spark, tmp_path, scheme="", conditional_put=None):
     # anything else is an orphan the protocol leaked
     ann.refresh()
     ann.vacuum(keep_versions=1, min_age_sec=0)
-    meta = ann._load_meta()
+    meta = ann._vlog.latest()
     listing = vi._list_dir(ann.path)
     segs = {n for n in listing if n.startswith("seg-")}
     quants = {n for n in listing if n.startswith("quantizer-")}
@@ -154,7 +154,7 @@ def _run_chaos(spark, tmp_path, scheme="", conditional_put=None):
     assert quants == {meta["quantizer_dir"]}
     tix.refresh()
     tix.vacuum(keep_versions=1, min_age_sec=0)
-    tmeta = tix._load_meta()
+    tmeta = tix._vlog.latest()
     tsegs = {
         n for n in vi._list_dir(tix.path) if n.startswith("seg-")
     }

@@ -80,14 +80,14 @@ def test_orphan_dirs_warn_not_error(tree):
 
 def test_missing_referenced_dirs_are_errors(tree):
     vi, ann, _ = tree
-    meta = ann._load_meta()
+    meta = ann._vlog.latest()
     seg = next(iter(set(meta["assign"].values())))
     shutil.rmtree(f"{ann.path}/{seg}")
     shutil.rmtree(f"{ann.path}/{meta['quantizer_dir']}")
     rep = fsck_derived(ann)
     assert any("missing segment" in e for e in rep["errors"])
     assert any("missing quantizer dir" in e for e in rep["errors"])
-    gen = next(iter(set(dict(vi._load_manifest()[1]["partitions"]).values())))
+    gen = next(iter(set(vi._vlog.latest()["partitions"].values())))
     shutil.rmtree(f"{vi.path}/{gen}")
     prep = fsck_primary(vi)
     assert any("missing generation" in e for e in prep["errors"])
@@ -113,7 +113,7 @@ def test_deep_mode_catches_served_primary_divergence(tree, spark):
     # hand-tamper: delete one row's codes from the segment parquet is
     # fiddly — instead re-point a title at a WRONG (empty) segment in a
     # forged meta, which deep mode must flag as missing served ids
-    meta = ann._load_meta()
+    meta = ann._vlog.latest()
     forged = dict(meta)
     seg = ann._new_segment(meta["data_version"])
     os.makedirs(f"{ann.path}/{seg}/cluster=0", exist_ok=True)
@@ -151,7 +151,7 @@ def test_foreign_format_and_revoked_less_metas_are_errors(tree):
 
     _, ann, tix = tree
     for idx in (ann, tix):
-        meta = idx._load_meta()
+        meta = idx._vlog.latest()
         forged = [
             {k: v for k, v in meta.items() if k != "format"},
             dict(meta, format=idx.FORMAT + 1),
@@ -159,10 +159,7 @@ def test_foreign_format_and_revoked_less_metas_are_errors(tree):
         ]
         first = meta["meta_version"] + 1
         for v, payload in enumerate(forged, start=first):
-            assert idx.vindex._create_exclusive(
-                f"{idx.meta_dir}/{idx._meta_name(v)}",
-                _json.dumps(payload).encode(),
-            )
+            idx._vlog.publish(v, _json.dumps(payload).encode())
         errors = fsck_derived(idx)["errors"]
         assert any(
             f"meta v{first} has format None" in e and "rebuild" in e

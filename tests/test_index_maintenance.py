@@ -491,14 +491,6 @@ def test_min_age_blocks_reclaim_of_fresh_supersession(index, spark):
     assert out2["manifests_removed"] >= 1
 
 
-def test_expired_lease_does_not_block_vacuum(index, spark):
-    index.upsert(make_updates(spark, [("a_0", "formA", "v1")]))
-    with index.reader_lease(ttl_sec=-1) as snap:  # born expired
-        index.upsert(make_updates(spark, [("a_0", "formA", "v2")]))
-        out = index.vacuum(keep_versions=1, min_age_sec=0)
-        assert snap.version not in out["retained_versions"]
-
-
 def test_hot_title_salt_split_produces_multiple_files(index, spark):
     """A skewed upsert (one title far above SKEW_SPLIT_ROWS) must fan
     its generation write across several tasks/files while preserving
@@ -593,8 +585,8 @@ def test_dim_stamped_in_manifest_and_served_without_jobs(index, spark):
     manifest; dimension() then answers driver-side — ZERO Spark jobs
     (round-9 optimization: the per-upsert data-probe job is gone)."""
     index.upsert(make_updates(spark, [("a_0", "formA", "alpha")]))
-    m = index._load_manifest()
-    assert m is not None and m[1].get("dim") == 16
+    m = index._vlog.latest()
+    assert m is not None and m.get("dim") == 16
     sc = spark.sparkContext
     sc.setJobGroup("dim-probe", "dimension() must not launch jobs")
     try:
@@ -618,8 +610,8 @@ def test_mixed_dim_first_batch_stamps_nothing_and_probes(index, spark):
         "id string, vector array<float>, title string, text string",
     )
     index.upsert(mixed)
-    m = index._load_manifest()
-    assert m is not None and "dim" not in m[1]
+    m = index._vlog.latest()
+    assert m is not None and "dim" not in m
     assert index.dimension() in (2, 3)  # data probe, head row's size
 
 
@@ -635,5 +627,5 @@ def test_dim_stamp_cleared_on_fresh_reupsert_after_full_delete(index, spark):
     )
     index.upsert(new)
     assert index.dimension() == 3
-    m = index._load_manifest()
-    assert m[1].get("dim") == 3
+    m = index._vlog.latest()
+    assert m.get("dim") == 3

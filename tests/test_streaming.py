@@ -422,7 +422,7 @@ def test_streaming_vector_ingest_multibatch_and_replay(spark, tmp_path):
         spark, stream, str(tmp_path / "idx"), str(tmp_path / "ckpt"),
         query_name="t_vec_ingest_1",
     )
-    v1, _ = idx._load_manifest() or (0, {})
+    v1 = idx._vlog.latest()["version"]
     got = {r["id"]: (r["title"], r["vector"]) for r in idx.read().collect()}
     assert got == {"1": ("a", [1.0, 0.0]), "2": ("b", [0.0, 1.0])}
 
@@ -434,7 +434,7 @@ def test_streaming_vector_ingest_multibatch_and_replay(spark, tmp_path):
         spark, stream, str(tmp_path / "idx"), str(tmp_path / "ckpt"),
         query_name="t_vec_ingest_2",
     )
-    v2, _ = idx._load_manifest()
+    v2 = idx._vlog.latest()["version"]
     assert v2 > v1
     got = {r["id"]: (r["title"], r["vector"]) for r in idx.read().collect()}
     assert got == {

@@ -128,7 +128,7 @@ def test_bucket_mismatch_raises_not_silent_empty(spark, tmp_path):
 
     vi.upsert(_updates(spark, [("new_0", "formNew", "quantum spark leap")]))
     handle.refresh()
-    assert handle._load_meta()["buckets"] == BUCKETS
+    assert handle._vlog.latest()["buckets"] == BUCKETS
     got = _served(handle, ["quantum", "spark"])
     assert "new_0" in got
     _assert_near(got, _inplan(vi, ["quantum", "spark"]))
