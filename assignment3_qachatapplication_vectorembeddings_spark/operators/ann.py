@@ -26,6 +26,7 @@ native Spark expressions.
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Iterator, Sequence
 
 import numpy as np
@@ -45,8 +46,6 @@ from .topk import topk_cosine
 
 __all__ = [
     "make_planes",
-    "build_ivf_index",
-    "load_ivf_index",
     "lsh_signatures",
     "query_signatures",
     "lsh_topk",
@@ -59,8 +58,6 @@ __all__ = [
     "pq_topk",
     "ivfpq_build",
     "ivfpq_encode",
-    "build_ivfpq_index",
-    "load_ivfpq_index",
     "sq8_train",
     "sq8_encode",
     "sq8_scores",
@@ -347,49 +344,40 @@ def ivf_topk(
 
 
 # ----------------------------------------------------------------------
-# Persisted IVF index: parquet partitioned by cluster. The probe filter
-# is a literal IN list over the partition column, so Catalyst prunes to
-# nprobe directories at PLANNING time — query cost is independent of
-# corpus size (the claim tests/test_ann.py asserts via the scan plan).
+# Rank step shared by the code-scored top-ks (PQ, IVFPQ, SQ8): each
+# scores its codes its own way, then ranks the scored rows here.
 # ----------------------------------------------------------------------
 
 
-def build_ivf_index(
-    emb: DataFrame,
-    path: str,
+def _shortlist_size(k: int, shortlist: int | None) -> int:
+    """Rows the approximate pass hands the exact re-rank: generous by
+    default, since a true neighbor outside the shortlist is lost."""
+    return shortlist or max(10 * k, 100)
+
+
+def _rank(
+    scored: DataFrame,
+    qvec: Sequence[float],
+    k: int,
     *,
-    vec_col: str = "embedding",
-    nlist: int = 16,
-    seed: int = 42,
-) -> np.ndarray:
-    """Fit the quantizer, assign, and write the partitioned index +
-    centroid sidecar table. Returns the centroid matrix."""
-    centroids = ivf_fit_centroids(emb, vec_col=vec_col, nlist=nlist, seed=seed)
-    assigned = ivf_assign(emb, centroids, vec_col=vec_col)
-    (
-        assigned.repartition("cluster")
-        .write.mode("overwrite")
-        .partitionBy("cluster")
-        .parquet(path)
+    emb: DataFrame | None,
+    id_col: str,
+    vec_col: str,
+    shortlist: int | None,
+) -> DataFrame:
+    """Top ``k`` of ``scored`` by (score desc, id asc). With ``emb``,
+    the approximate order only picks a shortlist of ids, and an exact
+    cosine re-rank of their originals in ``emb`` picks the final ``k``
+    (FAISS ``refine``)."""
+    order = (F.desc("score"), F.asc(id_col))
+    if emb is None:
+        return scored.orderBy(*order).limit(k)
+    short = (
+        scored.orderBy(*order).limit(_shortlist_size(k, shortlist)).select(id_col)
     )
-    spark = emb.sparkSession
-    cent_rows = [(int(i), [float(v) for v in c]) for i, c in enumerate(centroids)]
-    spark.createDataFrame(cent_rows, "cluster int, centroid array<double>").write.mode(
-        "overwrite"
-    ).parquet(path + "__centroids")
-    return centroids
-
-
-def load_ivf_index(spark, path: str):
-    """(assigned DataFrame, centroid matrix) from a persisted index."""
-    assigned = spark.read.parquet(path)
-    cent = (
-        spark.read.parquet(path + "__centroids")
-        .orderBy("cluster")
-        .collect()
+    return topk_cosine(
+        emb.join(short, id_col, "left_semi"), qvec, k, vec_col=vec_col
     )
-    centroids = np.array([r["centroid"] for r in cent])
-    return assigned, centroids
 
 
 # ----------------------------------------------------------------------
@@ -535,18 +523,10 @@ def pq_topk(
         return pd.Series(np.where(denom > 0, dots / denom, 0.0))
 
     scored = codes.withColumn("score", _adc(F.col("codes")))
-    if emb is None:
-        return (
-            scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k).drop("codes")
-        )
-    s = shortlist or max(10 * k, 100)
-    short = (
-        scored.orderBy(F.desc("score"), F.asc(id_col))
-        .limit(s)
-        .select(id_col)
+    ranked = _rank(
+        scored, qvec, k, emb=emb, id_col=id_col, vec_col=vec_col, shortlist=shortlist
     )
-    rerank = emb.join(short, id_col, "left_semi")
-    return topk_cosine(rerank, qvec, k, vec_col=vec_col)
+    return ranked if emb is not None else ranked.drop("codes")
 
 
 # ----------------------------------------------------------------------
@@ -692,6 +672,74 @@ def ivfpq_encode(
     ).drop("_e", "_p")
 
 
+def _ivfpq_scored(
+    encoded: DataFrame,
+    centroids: np.ndarray,
+    codebooks: np.ndarray,
+    qvec: Sequence[float],
+    *,
+    nprobe: int,
+) -> DataFrame:
+    """Score step of :func:`ivfpq_topk` under ONE quantizer: the rows
+    of the ``nprobe`` nearest cells, with their ADC cosine ``score``."""
+    cb = codebooks
+    m, _, dsub = cb.shape
+    q = np.asarray(qvec, dtype=np.float64)
+    if q.shape[0] != m * dsub:
+        raise ValueError(f"query dim {q.shape[0]} != codebook dim {m * dsub}")
+    qn = float(np.sqrt((q * q).sum()))
+    dcell = ((centroids - q[None, :]) ** 2).sum(axis=1)
+    probe = [int(cix) for cix in np.argsort(dcell)[:nprobe]]
+    qc = centroids @ q  # (nlist,) per-cell dot offsets
+    lut = np.stack([cb[i] @ q[i * dsub : (i + 1) * dsub] for i in range(m)])
+    midx = np.arange(m)
+
+    @F.pandas_udf("double")
+    def _adc(cl: pd.Series, code_col: pd.Series, norm: pd.Series) -> pd.Series:
+        if not len(cl):
+            return pd.Series([], dtype=float)
+        codes = np.array([np.asarray(cc, dtype=np.int64) for cc in code_col])
+        dots = qc[cl.to_numpy(dtype=np.int64)] + lut[midx[None, :], codes].sum(axis=1)
+        n = norm.to_numpy(dtype=np.float64)
+        denom = qn * np.maximum(n, 1e-300)
+        return pd.Series(np.where(n > 0, dots / denom, 0.0))
+
+    return encoded.filter(F.col("cluster").isin(probe)).withColumn(
+        "score", _adc(F.col("cluster"), F.col("codes"), F.col("norm"))
+    )
+
+
+def _ivfpq_topk_groups(
+    groups: Sequence[tuple],
+    qvec: Sequence[float],
+    k: int,
+    *,
+    nprobe: int,
+    emb: DataFrame | None,
+    id_col: str,
+    vec_col: str,
+    shortlist: int | None,
+) -> DataFrame:
+    """:func:`ivfpq_topk` over ``groups`` of ``(centroids, codebooks,
+    encoded)``: codes tables each encoded under its own quantizer (a
+    synced index between a partial retrain and the next compact). Each
+    group is scored under its own codebooks, the scored rows union, and
+    one rank follows: an id's best ADC score wins, then :func:`_rank`.
+    Scores compare across groups because every LUT approximates the
+    same cosine; one group is the plain single-table plan."""
+    scored = reduce(
+        DataFrame.unionByName,
+        [
+            _ivfpq_scored(encoded, centroids, codebooks, qvec, nprobe=nprobe)
+            for centroids, codebooks, encoded in groups
+        ],
+    )
+    best = scored.groupBy(id_col).agg(F.max("score").alias("score"))
+    return _rank(
+        best, qvec, k, emb=emb, id_col=id_col, vec_col=vec_col, shortlist=shortlist
+    )
+
+
 def ivfpq_topk(
     encoded: DataFrame,
     centroids: np.ndarray,
@@ -718,40 +766,207 @@ def ivfpq_topk(
 
     With ``emb`` given, ADC only shortlists and the final ``k`` come
     from an exact cosine re-rank — FAISS ``IVFPQ + refine``."""
+    return _ivfpq_topk_groups(
+        [(centroids, codebooks, encoded)], qvec, k, nprobe=nprobe, emb=emb,
+        id_col=id_col, vec_col=vec_col, shortlist=shortlist,
+    )
+
+
+def _ivfpq_scored_batch(
+    encoded: DataFrame,
+    centroids: np.ndarray,
+    codebooks: np.ndarray,
+    qids: np.ndarray,
+    qmat: np.ndarray,
+    *,
+    nprobe: int,
+    keep: int,
+    q_id_col: str,
+    qid_ddl: str,
+    id_col: str,
+) -> DataFrame:
+    """Score step of :func:`ivfpq_topk_batch` under ONE quantizer:
+    ``(q_id_col, id_col, score)`` candidates from one ``mapInPandas``
+    pass over the union of the queries' probed cells, each code row
+    scored against exactly the queries probing its cell. Per slab,
+    cell and query only the top ``keep`` scores survive, plus boundary
+    ties (see :func:`ivfpq_topk_batch`)."""
     cb = codebooks
     m, _, dsub = cb.shape
-    q = np.asarray(qvec, dtype=np.float64)
-    if q.shape[0] != m * dsub:
-        raise ValueError(f"query dim {q.shape[0]} != codebook dim {m * dsub}")
-    qn = float(np.sqrt((q * q).sum()))
-    dcell = ((centroids - q[None, :]) ** 2).sum(axis=1)
-    probe = [int(cix) for cix in np.argsort(dcell)[:nprobe]]
-    qc = centroids @ q  # (nlist,) per-cell dot offsets
-    lut = np.stack([cb[i] @ q[i * dsub : (i + 1) * dsub] for i in range(m)])
-    midx = np.arange(m)
-
-    @F.pandas_udf("double")
-    def _adc(cl: pd.Series, code_col: pd.Series, norm: pd.Series) -> pd.Series:
-        if not len(cl):
-            return pd.Series([], dtype=float)
-        codes = np.array([np.asarray(cc, dtype=np.int64) for cc in code_col])
-        dots = qc[cl.to_numpy(dtype=np.int64)] + lut[midx[None, :], codes].sum(axis=1)
-        n = norm.to_numpy(dtype=np.float64)
-        denom = qn * np.maximum(n, 1e-300)
-        return pd.Series(np.where(n > 0, dots / denom, 0.0))
-
-    scored = encoded.filter(F.col("cluster").isin(probe)).withColumn(
-        "score", _adc(F.col("cluster"), F.col("codes"), F.col("norm"))
+    if qmat.shape[1] != m * dsub:
+        raise ValueError(f"query dim {qmat.shape[1]} != codebook dim {m * dsub}")
+    qn = np.sqrt((qmat * qmat).sum(axis=1))
+    # per-query probe sets -> cluster -> [query rows probing it]
+    d2 = ((qmat[:, None, :] - centroids[None, :, :]) ** 2).sum(axis=2)
+    probes = np.argsort(d2, axis=1)[:, :nprobe]  # (Q, nprobe)
+    probe_cols: dict[int, np.ndarray] = {}
+    for j in range(len(qmat)):
+        for c in probes[j]:
+            probe_cols.setdefault(int(c), []).append(j)
+    probe_cols = {c: np.asarray(js, dtype=np.int64) for c, js in probe_cols.items()}
+    qc = qmat @ centroids.T  # (Q, nlist)
+    lut = np.stack(
+        [cb[i] @ qmat[:, i * dsub : (i + 1) * dsub].T for i in range(m)]
+    )  # (m, ksub, Q)
+    bc = encoded.sparkSession.sparkContext.broadcast(
+        {"lut": lut, "qc": qc, "qn": qn, "qids": qids, "probe_cols": probe_cols}
     )
-    best = scored.groupBy(id_col).agg(F.max("score").alias("score"))
+    id_ddl = encoded.schema[id_col].dataType.simpleString()
+    out_schema = f"{q_id_col} {qid_ddl}, {id_col} {id_ddl}, score double"
+
+    def _score(batches):
+        B = bc.value
+        lut_, qc_, qn_, qids_ = B["lut"], B["qc"], B["qn"], B["qids"]
+        cols = B["probe_cols"]
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            out = []
+            for c, grp in pdf.groupby("cluster", sort=False):
+                S = cols.get(int(c))
+                if S is None or not len(grp):
+                    continue
+                codes = np.array(
+                    [np.asarray(x, dtype=np.int64) for x in grp["codes"]]
+                )  # (r, m)
+                r = len(codes)
+                dots = qc_[S, int(c)][None, :].repeat(r, axis=0)
+                for i in range(lut_.shape[0]):
+                    dots += lut_[i][codes[:, i][:, None], S[None, :]]
+                norm = grp["norm"].to_numpy(dtype=np.float64)
+                denom = qn_[S][None, :] * np.maximum(norm, 1e-300)[:, None]
+                scores = np.where(norm[:, None] > 0, dots / denom, 0.0)
+                ids = grp[id_col].to_numpy()
+                for jj in range(len(S)):
+                    col = scores[:, jj]
+                    if r > keep:
+                        # keep top `keep` PLUS boundary ties: the global
+                        # (score desc, id asc) order resolves them
+                        thresh = np.partition(col, r - keep)[r - keep]
+                        kept = col >= thresh
+                    else:
+                        kept = slice(None)
+                    kid, ks = ids[kept], col[kept]
+                    out.append(
+                        pd.DataFrame(
+                            {
+                                q_id_col: np.full(len(ks), qids_[S[jj]]),
+                                id_col: kid,
+                                "score": ks,
+                            }
+                        )
+                    )
+            if out:
+                yield pd.concat(out, ignore_index=True)
+
+    return (
+        encoded.filter(F.col("cluster").isin(sorted(probe_cols)))
+        .select(id_col, "cluster", "codes", "norm")
+        .mapInPandas(_score, schema=out_schema)
+    )
+
+
+def _ivfpq_topk_batch_groups(
+    groups: Sequence[tuple],
+    queries: DataFrame,
+    k: int,
+    *,
+    nprobe: int,
+    emb: DataFrame | None,
+    q_id_col: str,
+    q_vec_col: str,
+    id_col: str,
+    vec_col: str,
+    shortlist: int | None,
+    max_queries: int,
+) -> DataFrame:
+    """:func:`ivfpq_topk_batch` over ``groups`` of ``(centroids,
+    codebooks, encoded)`` (see :func:`_ivfpq_topk_groups`): the batch
+    is collected and checked once, each group is scored under its own
+    codebooks, the candidates union, and one per-query rank follows."""
+    from pyspark.sql.window import Window
+
+    from ..functions.similarity import cosine_sim
+
+    qpdf = queries.select(q_id_col, q_vec_col).limit(max_queries + 1).toPandas()
+    if len(qpdf) > max_queries:
+        raise ValueError(
+            f"batch has more than max_queries={max_queries} rows; raise the "
+            "bound or split the batch (driver memory holds one LUT per query)"
+        )
+    if not len(qpdf):
+        # shape the empty result like the NON-empty path would: the
+        # rerank variant carries emb's columns (an accelerated
+        # ask_batch on zero questions must not change schema by
+        # cardinality — confirmed round-6 review crash)
+        qid_field = StructField(q_id_col, queries.schema[q_id_col].dataType)
+        score_field = StructField("score", DoubleType())
+        encoded = groups[0][2]
+        if emb is not None:
+            # non-empty rerank order: the equi-join puts the key FIRST
+            # (emb.join(short, id_col) -> id_col, other emb cols, qid,
+            # score) — mirror that here so column order does not vary
+            # by cardinality even when id_col is not emb's first column
+            rest = [
+                f for f in emb.drop(vec_col).schema.fields if f.name != id_col
+            ]
+            fields = (
+                [StructField(id_col, emb.schema[id_col].dataType)]
+                + rest
+                + [qid_field, score_field]
+            )
+        else:
+            # non-empty ADC order: qid, id, score
+            fields = [
+                qid_field,
+                StructField(id_col, encoded.schema[id_col].dataType),
+                score_field,
+            ]
+        return encoded.sparkSession.createDataFrame([], StructType(fields))
+    if qpdf[q_id_col].duplicated().any():
+        # two queries under one qid would interleave their candidates
+        # into one garbage ranking — fail loudly instead
+        dup = qpdf[q_id_col][qpdf[q_id_col].duplicated()].iloc[0]
+        raise ValueError(f"duplicate {q_id_col} in batch (e.g. {dup!r})")
+    qmat = np.array([np.asarray(v, dtype=np.float64) for v in qpdf[q_vec_col]])
+    qids = qpdf[q_id_col].to_numpy()
+    s_keep = k if emb is None else _shortlist_size(k, shortlist)
+    qid_ddl = queries.schema[q_id_col].dataType.simpleString()
+    cands = reduce(
+        DataFrame.unionByName,
+        [
+            _ivfpq_scored_batch(
+                encoded, centroids, codebooks, qids, qmat,
+                nprobe=nprobe, keep=s_keep, q_id_col=q_id_col,
+                qid_ddl=qid_ddl, id_col=id_col,
+            )
+            for centroids, codebooks, encoded in groups
+        ],
+    )
+    # multi-posted ids: best ADC score wins (map-side-combinable max)
+    best = cands.groupBy(q_id_col, id_col).agg(F.max("score").alias("score"))
+    w = Window.partitionBy(q_id_col).orderBy(F.desc("score"), F.asc(id_col))
+    ranked = best.withColumn("__rn", F.row_number().over(w))
     if emb is None:
-        return best.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
-    s = shortlist or max(10 * k, 100)
-    short = (
-        best.orderBy(F.desc("score"), F.asc(id_col)).limit(s).select(id_col)
+        return ranked.filter(F.col("__rn") <= k).drop("__rn")
+    short = ranked.filter(F.col("__rn") <= s_keep).select(q_id_col, id_col)
+    qf = F.broadcast(
+        queries.select(
+            F.col(q_id_col).alias("__qid"), F.col(q_vec_col).alias("__qvec")
+        )
     )
-    rerank = emb.join(short, id_col, "left_semi")
-    return topk_cosine(rerank, qvec, k, vec_col=vec_col)
+    exact = (
+        emb.join(short, id_col, "inner")
+        .join(qf, F.col(q_id_col) == F.col("__qid"))
+        .withColumn("score", cosine_sim(F.col(vec_col), F.col("__qvec")))
+        .drop("__qid", "__qvec", vec_col)
+    )
+    we = Window.partitionBy(q_id_col).orderBy(F.desc("score"), F.asc(id_col))
+    return (
+        exact.withColumn("__rn", F.row_number().over(we))
+        .filter(F.col("__rn") <= k)
+        .drop("__rn")
+    )
 
 
 def ivfpq_topk_batch(
@@ -791,153 +1006,13 @@ def ivfpq_topk_batch(
     gate oracle). Returns ``(q_id_col, <emb cols minus vector>, score)``
     with ``emb``, else ``(q_id_col, id_col, score)``.
     """
-    from pyspark.sql.window import Window
-
-    from ..functions.similarity import cosine_sim
-
-    cb = codebooks
-    m, _, dsub = cb.shape
-    qpdf = queries.select(q_id_col, q_vec_col).limit(max_queries + 1).toPandas()
-    if len(qpdf) > max_queries:
-        raise ValueError(
-            f"batch has more than max_queries={max_queries} rows; raise the "
-            "bound or split the batch (driver memory holds one LUT per query)"
-        )
-    if not len(qpdf):
-        # shape the empty result like the NON-empty path would: the
-        # rerank variant carries emb's columns (an accelerated
-        # ask_batch on zero questions must not change schema by
-        # cardinality — confirmed round-6 review crash)
-        from pyspark.sql.types import DoubleType, StructField, StructType
-
-        qid_field = StructField(q_id_col, queries.schema[q_id_col].dataType)
-        score_field = StructField("score", DoubleType())
-        if emb is not None:
-            # non-empty rerank order: the equi-join puts the key FIRST
-            # (emb.join(short, id_col) -> id_col, other emb cols, qid,
-            # score) — mirror that here so column order does not vary
-            # by cardinality even when id_col is not emb's first column
-            rest = [
-                f for f in emb.drop(vec_col).schema.fields if f.name != id_col
-            ]
-            fields = (
-                [StructField(id_col, emb.schema[id_col].dataType)]
-                + rest
-                + [qid_field, score_field]
-            )
-        else:
-            # non-empty ADC order: qid, id, score
-            fields = [
-                qid_field,
-                StructField(id_col, encoded.schema[id_col].dataType),
-                score_field,
-            ]
-        return encoded.sparkSession.createDataFrame([], StructType(fields))
-    if qpdf[q_id_col].duplicated().any():
-        # two queries under one qid would interleave their candidates
-        # into one garbage ranking — fail loudly instead
-        dup = qpdf[q_id_col][qpdf[q_id_col].duplicated()].iloc[0]
-        raise ValueError(f"duplicate {q_id_col} in batch (e.g. {dup!r})")
-    qmat = np.array([np.asarray(v, dtype=np.float64) for v in qpdf[q_vec_col]])
-    if qmat.shape[1] != m * dsub:
-        raise ValueError(f"query dim {qmat.shape[1]} != codebook dim {m * dsub}")
-    qids = qpdf[q_id_col].to_numpy()
-    qn = np.sqrt((qmat * qmat).sum(axis=1))
-    # per-query probe sets -> cluster -> [query rows probing it]
-    d2 = ((qmat[:, None, :] - centroids[None, :, :]) ** 2).sum(axis=2)
-    probes = np.argsort(d2, axis=1)[:, :nprobe]  # (Q, nprobe)
-    probe_cols: dict[int, np.ndarray] = {}
-    for j in range(len(qmat)):
-        for c in probes[j]:
-            probe_cols.setdefault(int(c), []).append(j)
-    probe_cols = {c: np.asarray(js, dtype=np.int64) for c, js in probe_cols.items()}
-    qc = qmat @ centroids.T  # (Q, nlist)
-    lut = np.stack(
-        [cb[i] @ qmat[:, i * dsub : (i + 1) * dsub].T for i in range(m)]
-    )  # (m, ksub, Q)
-    s_keep = k if emb is None else (shortlist or max(10 * k, 100))
-    bc = encoded.sparkSession.sparkContext.broadcast(
-        {"lut": lut, "qc": qc, "qn": qn, "qids": qids, "probe_cols": probe_cols}
+    return _ivfpq_topk_batch_groups(
+        [(centroids, codebooks, encoded)], queries, k, nprobe=nprobe, emb=emb,
+        q_id_col=q_id_col, q_vec_col=q_vec_col, id_col=id_col, vec_col=vec_col,
+        shortlist=shortlist, max_queries=max_queries,
     )
-    qid_ddl = queries.schema[q_id_col].dataType.simpleString()
-    id_ddl = encoded.schema[id_col].dataType.simpleString()
-    out_schema = f"{q_id_col} {qid_ddl}, {id_col} {id_ddl}, score double"
 
-    def _score(batches):
-        B = bc.value
-        lut_, qc_, qn_, qids_ = B["lut"], B["qc"], B["qn"], B["qids"]
-        cols = B["probe_cols"]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = []
-            for c, grp in pdf.groupby("cluster", sort=False):
-                S = cols.get(int(c))
-                if S is None or not len(grp):
-                    continue
-                codes = np.array(
-                    [np.asarray(x, dtype=np.int64) for x in grp["codes"]]
-                )  # (r, m)
-                r = len(codes)
-                dots = qc_[S, int(c)][None, :].repeat(r, axis=0)
-                for i in range(lut_.shape[0]):
-                    dots += lut_[i][codes[:, i][:, None], S[None, :]]
-                norm = grp["norm"].to_numpy(dtype=np.float64)
-                denom = qn_[S][None, :] * np.maximum(norm, 1e-300)[:, None]
-                scores = np.where(norm[:, None] > 0, dots / denom, 0.0)
-                ids = grp[id_col].to_numpy()
-                for jj in range(len(S)):
-                    col = scores[:, jj]
-                    if r > s_keep:
-                        # keep top s_keep PLUS boundary ties: the global
-                        # (score desc, id asc) order resolves them
-                        thresh = np.partition(col, r - s_keep)[r - s_keep]
-                        keep = col >= thresh
-                    else:
-                        keep = slice(None)
-                    kid, ks = ids[keep], col[keep]
-                    out.append(
-                        pd.DataFrame(
-                            {
-                                q_id_col: np.full(len(ks), qids_[S[jj]]),
-                                id_col: kid,
-                                "score": ks,
-                            }
-                        )
-                    )
-            if out:
-                yield pd.concat(out, ignore_index=True)
 
-    union_probe = sorted(probe_cols)
-    cands = (
-        encoded.filter(F.col("cluster").isin(union_probe))
-        .select(id_col, "cluster", "codes", "norm")
-        .mapInPandas(_score, schema=out_schema)
-    )
-    # multi-posted ids: best ADC score wins (map-side-combinable max)
-    best = cands.groupBy(q_id_col, id_col).agg(F.max("score").alias("score"))
-    w = Window.partitionBy(q_id_col).orderBy(F.desc("score"), F.asc(id_col))
-    ranked = best.withColumn("__rn", F.row_number().over(w))
-    if emb is None:
-        return ranked.filter(F.col("__rn") <= k).drop("__rn")
-    short = ranked.filter(F.col("__rn") <= s_keep).select(q_id_col, id_col)
-    qf = F.broadcast(
-        queries.select(
-            F.col(q_id_col).alias("__qid"), F.col(q_vec_col).alias("__qvec")
-        )
-    )
-    exact = (
-        emb.join(short, id_col, "inner")
-        .join(qf, F.col(q_id_col) == F.col("__qid"))
-        .withColumn("score", cosine_sim(F.col(vec_col), F.col("__qvec")))
-        .drop("__qid", "__qvec", vec_col)
-    )
-    we = Window.partitionBy(q_id_col).orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        exact.withColumn("__rn", F.row_number().over(we))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
 # ----------------------------------------------------------------------
 # Scalar quantization (FAISS ``SQ8``): each dimension quantized
 # independently to one byte on a per-dimension [min, max] range fit on
@@ -1060,79 +1135,8 @@ def sq8_topk(
     for the affine-decode scoring). With ``emb``, SQ8 shortlists and
     exact cosine re-ranks (FAISS ``SQ + refine``)."""
     scored = sq8_scores(encoded, vmin, vmax, qvec)
-    if emb is None:
-        return scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k).drop("codes")
-    s = shortlist or max(10 * k, 100)
-    short = scored.orderBy(F.desc("score"), F.asc(id_col)).limit(s).select(id_col)
-    rerank = emb.join(short, id_col, "left_semi")
-    return topk_cosine(rerank, qvec, k, vec_col=vec_col)
-
-
-# ----------------------------------------------------------------------
-# Persisted IVFPQ index: the CODES table partitioned by cluster (probe
-# pruning at planning time, like the IVF index) with centroids and
-# codebooks in a sidecar — so the float vectors can be dropped from the
-# serving path entirely: a probe reads m bytes + 1 norm per touched
-# row from nprobe directories. The raw-vector table is only needed for
-# the optional exact re-rank.
-# ----------------------------------------------------------------------
-
-
-def build_ivfpq_index(
-    emb: DataFrame,
-    path: str,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    nlist: int = 16,
-    m: int = 8,
-    nbits: int = 8,
-    posts: int = 1,
-    seed: int = 42,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Train, encode, and write the cluster-partitioned codes table +
-    quantizer sidecar. Returns (centroids, codebooks)."""
-    centroids, codebooks = ivfpq_build(
-        emb, vec_col=vec_col, nlist=nlist, m=m, nbits=nbits, seed=seed
+    ranked = _rank(
+        scored, qvec, k, emb=emb, id_col=id_col, vec_col=vec_col, shortlist=shortlist
     )
-    enc = ivfpq_encode(
-        emb, centroids, codebooks, vec_col=vec_col, posts=posts
-    ).select(id_col, "cluster", "codes", "norm")
-    (
-        enc.repartition("cluster")
-        .write.mode("overwrite")
-        .partitionBy("cluster")
-        .parquet(path)
-    )
-    spark = emb.sparkSession
-    m_, ksub, dsub = codebooks.shape
-    cent_rows = [
-        (int(i), [float(v) for v in c]) for i, c in enumerate(centroids)
-    ]
-    spark.createDataFrame(
-        cent_rows, "cluster int, centroid array<double>"
-    ).write.mode("overwrite").parquet(path + "__centroids")
-    cb_rows = [
-        (int(i), int(j), [float(v) for v in codebooks[i, j]])
-        for i in range(m_)
-        for j in range(ksub)
-    ]
-    spark.createDataFrame(
-        cb_rows, "subspace int, code int, centroid array<double>"
-    ).write.mode("overwrite").parquet(path + "__codebooks")
-    return centroids, codebooks
+    return ranked if emb is not None else ranked.drop("codes")
 
-
-def load_ivfpq_index(spark, path: str):
-    """(codes DataFrame, centroids, codebooks) from a persisted index."""
-    enc = spark.read.parquet(path)
-    cent = spark.read.parquet(path + "__centroids").orderBy("cluster").collect()
-    centroids = np.array([r["centroid"] for r in cent])
-    cb = spark.read.parquet(path + "__codebooks").orderBy("subspace", "code").collect()
-    m = 1 + max(r["subspace"] for r in cb)
-    ksub = 1 + max(r["code"] for r in cb)
-    dsub = len(cb[0]["centroid"])
-    codebooks = np.empty((m, ksub, dsub))
-    for r in cb:
-        codebooks[r["subspace"], r["code"]] = r["centroid"]
-    return enc, centroids, codebooks

@@ -199,6 +199,7 @@ class VectorIndex:
         #: created and did NOT exist (S3 PutObject If-None-Match: *).
         self.conditional_put = conditional_put
         self._atomic_create = atomic_create
+        self._path_scheme: str | None = None  # see _scheme
         # re-entrancy marker is per-thread: two threads sharing one
         # VectorIndex must still contend for the file lock
         self._lock_tls = threading.local()
@@ -212,15 +213,22 @@ class VectorIndex:
         return path.getFileSystem(hconf), jvm
 
     def _scheme(self) -> str:
-        if "://" in self.path:
-            return self.path.split("://", 1)[0]
-        if self.path.startswith("file:"):
-            return "file"
-        try:
-            fs, _jvm = self._fs()
-            return fs.getUri().getScheme() or "file"
-        except Exception:
-            return "file"  # no JVM filesystem reachable → plain local
+        # a path's scheme never changes: resolve it once, on first use
+        # (every metadata file operation asks; each uncached ask is
+        # several py4j round trips)
+        if self._path_scheme is None:
+            if "://" in self.path:
+                self._path_scheme = self.path.split("://", 1)[0]
+            elif self.path.startswith("file:"):
+                self._path_scheme = "file"
+            else:
+                try:
+                    fs, _jvm = self._fs()
+                    self._path_scheme = fs.getUri().getScheme() or "file"
+                except Exception:
+                    # no JVM filesystem reachable → plain local
+                    self._path_scheme = "file"
+        return self._path_scheme
 
     def _has_atomic_create(self) -> bool:
         if self._atomic_create is not None:

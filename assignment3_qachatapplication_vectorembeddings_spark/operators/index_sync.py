@@ -64,7 +64,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import term_bucket as py_term_bucket
-from .index_maintenance import VectorIndex
+from .index_maintenance import ConcurrentCommitError, VectorIndex
 from .snapshot_log import VersionLog
 from .text_search import (
     TOKENIZER_VERSION,
@@ -425,6 +425,11 @@ class _SyncedIndexBase:
             out.setdefault(s, [])
         return out
 
+    def _seg_quantizer_map(self, meta: dict) -> dict[str, tuple]:
+        """{segment: quantizer} for indexes with per-segment quantizers;
+        none here."""
+        return {}
+
     def refresh(self) -> dict:  # pragma: no cover - overridden
         raise NotImplementedError
 
@@ -480,12 +485,7 @@ class _SyncedIndexBase:
         m = self._vlog.latest()
         if m is None:
             return None
-        generations = {
-            tuple(q)
-            for q in (
-                getattr(self, "_seg_quantizer_map", lambda _m: {})(m) or {}
-            ).values()
-        }
+        generations = {tuple(q) for q in self._seg_quantizer_map(m).values()}
         if (
             len(set(m["assign"].values())) <= max_segments
             and len(generations) <= max_generations
@@ -539,6 +539,19 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
             seed,
         )
         self.drift_threshold = drift_threshold
+        #: quantizer_id -> (centroids, codebooks); see _load_quantizer
+        self._quantizer_cache_map: dict[str, tuple] = {}
+        #: tune results (see :meth:`tune`): published like metas, but
+        #: never leased, and vacuum never touches ``_tuned/``
+        self._tuned_log = VersionLog(
+            vindex,
+            f"{self.path}/_tuned",
+            f"{self.path}/_tuned_leases",
+            version_key="tuned_version",
+            accept=lambda _payload: True,
+            conflict_error=ConcurrentCommitError,
+            expired_error=StaleIndexError,
+        )
 
     # -- quantizer drift guard ------------------------------------------------
 
@@ -647,9 +660,7 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
         # MULTIPLE quantizers live at once — per-segment pinning — and a
         # single-entry cache would thrash reloading two quantizers on
         # every mixed-generation search
-        cache = getattr(self, "_quantizer_cache_map", None)
-        if cache is None:
-            cache = self._quantizer_cache_map = {}
+        cache = self._quantizer_cache_map
         hit = cache.get(quantizer_id)
         if hit is not None:
             return hit
@@ -745,10 +756,7 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
             quantizer_id = uuid.uuid4().hex[:12]
             qdir = self._new_quantizer_dir(quantizer_id)
             self._write_quantizer(centroids, codebooks, qdir)
-            cache = getattr(self, "_quantizer_cache_map", None)
-            if cache is None:
-                cache = self._quantizer_cache_map = {}
-            cache[quantizer_id] = (centroids, codebooks)
+            self._quantizer_cache_map[quantizer_id] = (centroids, codebooks)
             seg = self._new_segment(version)
             self._encode_titles(None, centroids, codebooks, seg, reader=snap.read)
             # drift baseline: reconstruction error of a DRIFT_SAMPLE
@@ -866,10 +874,7 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
             quantizer_id = uuid.uuid4().hex[:12]
             qdir = self._new_quantizer_dir(quantizer_id)
             self._write_quantizer(centroids, codebooks, qdir)
-            cache = getattr(self, "_quantizer_cache_map", None)
-            if cache is None:
-                cache = self._quantizer_cache_map = {}
-            cache[quantizer_id] = (centroids, codebooks)
+            self._quantizer_cache_map[quantizer_id] = (centroids, codebooks)
             seg = self._new_segment(cur_version)
             self._encode_titles(
                 want, centroids, codebooks, seg, reader=snap.read
@@ -926,9 +931,6 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
     #: the target (early-stop), so it costs nothing on healthy data
     TUNE_SHORTLIST_MULTS = (10, 50, 250)
 
-    def _tuned_dir(self) -> str:
-        return f"{self.path}/_tuned"
-
     def tuned_params(self) -> dict | None:
         """Newest committed tune result (see :meth:`tune`), or None.
         Stored as versioned JSON sidecars under ``{path}/_tuned/`` —
@@ -937,17 +939,10 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
         compact / vacuum cycles. A :meth:`retrain` changes the
         quantizer, which can shift the recall of a pinned config —
         re-run :meth:`tune` after retrains when the target matters."""
-        names = sorted(
-            n
-            for n in self.vindex._list_dir(self._tuned_dir())
-            if n.startswith("v") and n.endswith(".json")
-        )
-        for name in reversed(names):
-            data = self.vindex._read_small_file(f"{self._tuned_dir()}/{name}")
-            if data:
-                with contextlib.suppress(ValueError):
-                    return json.loads(data)
-        return None
+        t = self._tuned_log.latest()
+        if t is not None:
+            del t[self._tuned_log.version_key]
+        return t
 
     def tuned_search_kwargs(self) -> dict:
         """The newest tune result as :meth:`search` /
@@ -967,20 +962,15 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
 
     def _publish_tuned(self, payload: dict) -> None:
         body = json.dumps(payload, sort_keys=True).encode()
+        log = self._tuned_log
         for _ in range(5):
-            names = [
-                n
-                for n in self.vindex._list_dir(self._tuned_dir())
-                if n.startswith("v") and n.endswith(".json")
-            ]
-            nxt = 1 + max((int(n[1:-5]) for n in names), default=0)
-            if self.vindex._create_exclusive(
-                f"{self._tuned_dir()}/v{nxt:020d}.json", body
-            ):
+            try:
+                log.publish(1 + max(log.versions(), default=0), body)
                 return
-            # create-if-absent lost to a concurrent tune: re-list, bump
+            except ConcurrentCommitError:
+                continue  # lost to a concurrent tune: re-list, bump
         raise RuntimeError(
-            f"could not publish tune result at {self._tuned_dir()} after "
+            f"could not publish tune result at {log.log_dir} after "
             "5 attempts — concurrent tuners racing; retry"
         )
 
@@ -1031,16 +1021,7 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
         from .topk import knn_join
 
         meta = self._resolve(on_stale)
-        payload = self.vindex._vlog.load(meta["data_version"])
-        if payload is None:
-            raise StaleIndexError(
-                f"primary manifest v{meta['data_version']} has been "
-                f"vacuumed at {self.vindex.path}; refresh() or lease"
-            )
-        live = sorted(meta["assign"])
-        if titles is not None:
-            live = sorted(set(titles) & set(live))
-        emb = self.vindex._read_manifest_payload(payload, titles=live)
+        emb = self._pinned_rows(meta, titles)
 
         # deterministic hash-spread query sample (bounded collect)
         n = emb.select("id").count()
@@ -1304,25 +1285,40 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
         """[(centroids, codebooks, encoded codes DataFrame)] — one per
         DISTINCT quantizer among the live segments. Single-quantizer
         metas (everything except a window between a partial retrain and
-        the next compact/build) yield exactly one group, and serving
-        takes the identical plan it always took."""
-        qmap = self._seg_quantizer_map(meta)
+        the next compact/build) yield exactly one group over every live
+        segment, so serving takes the plain single-table plan. An index
+        with no live titles yields the head quantizer over no rows."""
         by_q: dict[tuple, set] = {}
-        for seg, q in qmap.items():
+        for seg, q in self._seg_quantizer_map(meta).items():
             by_q.setdefault(q, set()).add(seg)
-        groups = []
-        for (qid, qdir), segs in sorted(by_q.items(), key=lambda kv: str(kv[0])):
-            centroids, codebooks = self._load_quantizer(qid, qdir)
-            groups.append(
-                (
-                    centroids,
-                    codebooks,
-                    self._encoded_for(
-                        meta, titles, segs=None if len(by_q) == 1 else segs
-                    ),
-                )
+        if not by_q:
+            by_q[(meta["quantizer_id"], meta["quantizer_dir"])] = set()
+        return [
+            (*self._load_quantizer(qid, qdir), self._encoded_for(meta, titles, segs))
+            for (qid, qdir), segs in sorted(by_q.items(), key=lambda kv: str(kv[0]))
+        ]
+
+    def _pinned_rows(self, meta: dict, titles: Sequence[str] | None) -> DataFrame:
+        """The primary's rows for ``meta``'s live titles (∩ ``titles``),
+        read through the manifest the meta indexed
+        (``meta["data_version"]``) — never the live head, so under
+        ``on_stale='serve'`` (or the check-to-read race) codes and rows
+        are ONE snapshot: ids deleted since indexing are still
+        readable, replaced ids carry the vectors the codes were built
+        from. Raises :class:`StaleIndexError` if that manifest has been
+        vacuumed (lease the primary or refresh)."""
+        live = sorted(meta["assign"])
+        if titles is not None:
+            live = sorted(set(titles) & set(live))
+        payload = self.vindex._vlog.load(meta["data_version"])
+        if payload is None:
+            raise StaleIndexError(
+                f"primary manifest v{meta['data_version']} (the snapshot "
+                f"this {self.KIND} index serves) has been vacuumed at "
+                f"{self.vindex.path}; refresh() the index or hold a "
+                "primary reader_lease across serving"
             )
-        return groups
+        return self.vindex._read_manifest_payload(payload, titles=live)
 
     def search(
         self,
@@ -1336,75 +1332,21 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
         on_stale: str = "error",
     ) -> DataFrame:
         """ADC top-k over the synced codes table; ``rerank=True`` adds
-        the exact-cosine refine stage against the primary's vectors
-        read through the PINNED manifest the meta indexed
-        (``meta["data_version"]``) — never the live head, so under
-        ``on_stale='serve'`` (or the check-to-read race) the shortlist
-        and the re-rank see ONE snapshot: ids deleted since indexing
-        are still re-rankable, replaced ids score with the vectors the
-        codes were built from. If that manifest has been vacuumed the
-        serve fails loudly with :class:`StaleIndexError` (lease the
-        primary or refresh). ``titles`` applies the reference's ``$in``
-        metadata predicate BEFORE scoring (P5) — on both the code scan
-        and the re-rank read."""
-        from .ann import ivfpq_topk
-        from .topk import topk_cosine
+        the exact-cosine refine stage against the primary's vectors of
+        the PINNED snapshot (:meth:`_pinned_rows`). ``titles`` applies
+        the reference's ``$in`` metadata predicate BEFORE scoring (P5)
+        — on both the code scan and the re-rank read. Between a
+        partial retrain and the next compact, each quantizer's segments
+        are scored under their own codebooks and ranked once
+        (:func:`~.ann._ivfpq_topk_groups`)."""
+        from .ann import _ivfpq_topk_groups
 
         meta = self._resolve(on_stale)
         groups = self._quantizer_groups(meta, titles)
-        emb = None
-        if rerank:
-            live = sorted(meta["assign"])
-            if titles is not None:
-                live = sorted(set(titles) & set(live))
-            payload = self.vindex._vlog.load(meta["data_version"])
-            if payload is None:
-                raise StaleIndexError(
-                    f"primary manifest v{meta['data_version']} (the snapshot "
-                    f"this {self.KIND} index serves) has been vacuumed at "
-                    f"{self.vindex.path}; refresh() the index or hold a "
-                    "primary reader_lease across serving"
-                )
-            emb = self.vindex._read_manifest_payload(payload, titles=live)
-        if len(groups) == 1:
-            centroids, codebooks, enc = groups[0]
-            return ivfpq_topk(
-                enc,
-                centroids,
-                codebooks,
-                qvec,
-                k,
-                nprobe=nprobe,
-                emb=emb,
-                id_col="id",
-                vec_col="vector",
-                shortlist=shortlist,
-            )
-        # mixed-generation serving (between a partial retrain and the
-        # next compact): each quantizer's segments are ADC-scored under
-        # THEIR OWN codebooks, the per-group candidate lists union, and
-        # the final k comes from one ranking (exact re-rank when
-        # requested — identical in kind to the single-group path; pure
-        # ADC otherwise, where scores are comparable because every LUT
-        # approximates the same cosine)
-        s = k if emb is None else (shortlist or max(10 * k, 100))
-        cands = reduce(
-            DataFrame.unionByName,
-            [
-                ivfpq_topk(
-                    enc, centroids, codebooks, qvec, s,
-                    nprobe=nprobe, id_col="id",
-                )
-                for centroids, codebooks, enc in groups
-            ],
-        )
-        if emb is None:
-            return cands.orderBy(F.desc("score"), F.asc("id")).limit(k)
-        short = (
-            cands.orderBy(F.desc("score"), F.asc("id")).limit(s).select("id")
-        )
-        return topk_cosine(
-            emb.join(short, "id", "left_semi"), qvec, k, vec_col="vector"
+        emb = self._pinned_rows(meta, titles) if rerank else None
+        return _ivfpq_topk_groups(
+            groups, qvec, k, nprobe=nprobe, emb=emb, id_col="id",
+            vec_col="vector", shortlist=shortlist,
         )
 
     def search_batch(
@@ -1425,85 +1367,19 @@ class SyncedIvfpqIndex(_SyncedIndexBase):
         ONE scan of the union of their probed cells
         (:func:`~.ann.ivfpq_topk_batch`) — per-question jobs would
         rescan the codes table per query at batch-serving scale. Same
-        staleness policy, ``$in`` title predicate, and pinned-manifest
-        exact re-rank as the single-query path; with ``rerank`` the
-        output carries the primary's (id, title, text) per hit."""
-        from .ann import ivfpq_topk_batch
+        staleness policy, ``$in`` title predicate, pinned-snapshot
+        exact re-rank and mixed-generation scoring as the single-query
+        path; with ``rerank`` the output carries the primary's (id,
+        title, text) per hit."""
+        from .ann import _ivfpq_topk_batch_groups
 
         meta = self._resolve(on_stale)
         groups = self._quantizer_groups(meta, titles)
-        emb = None
-        if rerank:
-            live = sorted(meta["assign"])
-            if titles is not None:
-                live = sorted(set(titles) & set(live))
-            payload = self.vindex._vlog.load(meta["data_version"])
-            if payload is None:
-                raise StaleIndexError(
-                    f"primary manifest v{meta['data_version']} (the snapshot "
-                    f"this {self.KIND} index serves) has been vacuumed at "
-                    f"{self.vindex.path}; refresh() the index or hold a "
-                    "primary reader_lease across serving"
-                )
-            emb = self.vindex._read_manifest_payload(payload, titles=live)
-        if len(groups) == 1:
-            centroids, codebooks, enc = groups[0]
-            return ivfpq_topk_batch(
-                enc,
-                centroids,
-                codebooks,
-                queries,
-                k,
-                nprobe=nprobe,
-                emb=emb,
-                q_id_col=q_id_col,
-                q_vec_col=q_vec_col,
-                id_col="id",
-                vec_col="vector",
-                shortlist=shortlist,
-                max_queries=max_queries,
-            )
-        # mixed-generation batch serving: per-quantizer ADC candidate
-        # lists (each group scored under its own codebooks), unioned,
-        # then one per-query ranking — exact re-rank when requested,
-        # mirroring the single-query multi-group path
-        from pyspark.sql.window import Window
-
-        from ..functions.similarity import cosine_sim
-
-        s = k if emb is None else (shortlist or max(10 * k, 100))
-        cands = reduce(
-            DataFrame.unionByName,
-            [
-                ivfpq_topk_batch(
-                    enc, centroids, codebooks, queries, s,
-                    nprobe=nprobe, q_id_col=q_id_col, q_vec_col=q_vec_col,
-                    id_col="id", max_queries=max_queries,
-                )
-                for centroids, codebooks, enc in groups
-            ],
-        )
-        w = Window.partitionBy(q_id_col).orderBy(F.desc("score"), F.asc("id"))
-        ranked = cands.withColumn("__rn", F.row_number().over(w))
-        if emb is None:
-            return ranked.filter(F.col("__rn") <= k).drop("__rn")
-        short = ranked.filter(F.col("__rn") <= s).select(q_id_col, "id")
-        qf = F.broadcast(
-            queries.select(
-                F.col(q_id_col).alias("__qid"), F.col(q_vec_col).alias("__qvec")
-            )
-        )
-        exact = (
-            emb.join(short, "id", "inner")
-            .join(qf, F.col(q_id_col) == F.col("__qid"))
-            .withColumn("score", cosine_sim(F.col("vector"), F.col("__qvec")))
-            .drop("__qid", "__qvec", "vector")
-        )
-        we = Window.partitionBy(q_id_col).orderBy(F.desc("score"), F.asc("id"))
-        return (
-            exact.withColumn("__rn", F.row_number().over(we))
-            .filter(F.col("__rn") <= k)
-            .drop("__rn")
+        emb = self._pinned_rows(meta, titles) if rerank else None
+        return _ivfpq_topk_batch_groups(
+            groups, queries, k, nprobe=nprobe, emb=emb, q_id_col=q_id_col,
+            q_vec_col=q_vec_col, id_col="id", vec_col="vector",
+            shortlist=shortlist, max_queries=max_queries,
         )
 
 

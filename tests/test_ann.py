@@ -116,44 +116,6 @@ def test_ivf_scores_are_exact_on_candidates(emb, qvec):
         assert s == pytest.approx(full[vid], abs=1e-9)
 
 
-def test_persisted_ivf_index_prunes_partitions(spark, emb, qvec, exact_ids, tmp_path):
-    from assignment3_qachatapplication_vectorembeddings_spark.operators.ann import (
-        build_ivf_index,
-        load_ivf_index,
-    )
-
-    path = str(tmp_path / "ivf")
-    cents = build_ivf_index(emb, path, nlist=16)
-    assigned, loaded_cents = load_ivf_index(spark, path)
-    assert np.allclose(cents, loaded_cents)
-
-    got = {
-        r["vec_id"]
-        for r in ivf_topk(assigned, loaded_cents, qvec, K, nprobe=8)
-        .select("vec_id")
-        .collect()
-    }
-    # persisted index answers like the in-memory one
-    mem = {
-        r["vec_id"]
-        for r in ivf_topk(ivf_assign(emb, cents), cents, qvec, K, nprobe=8)
-        .select("vec_id")
-        .collect()
-    }
-    assert got == mem
-
-    # the probe filter must reach the scan as a partition filter
-    # (planning-time pruning: cost independent of corpus size)
-    probe = [int(c) for c in np.argsort(((loaded_cents - np.asarray(qvec)) ** 2).sum(1))[:8]]
-    plan = (
-        assigned.filter(F.col("cluster").isin(probe))
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PartitionFilters" in plan and "cluster" in plan
-
-
 def test_pq_encode_shape_and_bounds(spark, emb):
     from assignment3_qachatapplication_vectorembeddings_spark.operators.ann import (
         pq_encode,
@@ -377,52 +339,6 @@ def test_sq8_deterministic_and_dim_mismatch(spark, emb, qvec):
     assert a == b
     with pytest.raises(ValueError, match="range dim"):
         sq8_topk(enc, vmin, vmax, qvec[:-2], K)
-
-
-@pytest.mark.slow
-def test_persisted_ivfpq_index_round_trips_and_prunes(spark, emb, qvec, tmp_path):
-    """Persisted codes table + quantizer sidecar: loaded quantizers are
-    bit-identical, the persisted index answers like the in-memory one,
-    and the probe filter reaches the scan as a PARTITION filter — the
-    serving path reads m bytes + 1 norm per touched row from nprobe
-    directories, never a float vector."""
-    from assignment3_qachatapplication_vectorembeddings_spark.operators.ann import (
-        build_ivfpq_index,
-        ivfpq_build,
-        ivfpq_encode,
-        ivfpq_topk,
-        load_ivfpq_index,
-    )
-
-    path = str(tmp_path / "ivfpq")
-    cents, cb = build_ivfpq_index(emb, path, nlist=16, m=8, nbits=8, posts=2)
-    enc, lcents, lcb = load_ivfpq_index(spark, path)
-    assert np.allclose(cents, lcents) and np.allclose(cb, lcb)
-
-    got = [
-        r["vec_id"]
-        for r in ivfpq_topk(enc, lcents, lcb, qvec, K, nprobe=8).collect()
-    ]
-    mem_enc = ivfpq_encode(emb, cents, cb, posts=2).select(
-        "vec_id", "cluster", "codes", "norm"
-    )
-    mem = [
-        r["vec_id"]
-        for r in ivfpq_topk(mem_enc, cents, cb, qvec, K, nprobe=8).collect()
-    ]
-    assert got == mem
-
-    probe = [
-        int(c)
-        for c in np.argsort(((lcents - np.asarray(qvec)) ** 2).sum(1))[:8]
-    ]
-    plan = (
-        enc.filter(F.col("cluster").isin(probe))
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PartitionFilters" in plan and "cluster" in plan
 
 
 def test_ivfpq_topk_batch_full_probe_matches_exact_knn_join(spark, sf_dir):

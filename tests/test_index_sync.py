@@ -224,6 +224,28 @@ def test_quantizer_cache_invalidated_by_external_rebuild(vindex, tmp_path, spark
     assert qid_b in a._quantizer_cache_map
 
 
+def test_fresh_handle_loads_built_quantizer(ann, vindex):
+    """The quantizer sidecar round-trips: a new handle on the same path
+    loads the quantizer build() trained bit for bit, and serves the
+    same hits as the handle that built it."""
+    import numpy as np
+
+    meta = ann._vlog.latest()
+    built = ann._quantizer_cache_map[meta["quantizer_id"]]
+    fresh = SyncedIvfpqIndex(vindex, ann.path, nlist=4, m=4, nbits=4)
+    assert fresh._quantizer_cache_map == {}
+    loaded = fresh._load_quantizer(meta["quantizer_id"], meta["quantizer_dir"])
+    for want, got in zip(built, loaded):
+        assert got.shape == want.shape and got.tobytes() == want.tobytes()
+    q = EMB.embed_one("join strategies")
+    for rerank in (False, True):
+        want = ann.search(q, 5, nprobe=2, rerank=rerank).collect()
+        got = fresh.search(q, 5, nprobe=2, rerank=rerank).collect()
+        assert [(r["id"], r["score"]) for r in got] == [
+            (r["id"], r["score"]) for r in want
+        ]
+
+
 def test_refresh_uses_one_pinned_snapshot(vindex, tmp_path, spark):
     """refresh() leases the primary: vacuum during the encode cannot
     reclaim the pinned generations (retention honors the lease)."""
@@ -1167,6 +1189,85 @@ def test_partial_retrain_batch_matches_single_query_path(
             for r in ann.search(qvec, 4, nprobe=8, rerank=True).collect()
         ]
         assert sorted(by_q[qid]) == sorted(single), f"qid {qid}"
+
+
+def _union_then_rank(ann, vindex, qvec, k, *, nprobe, rerank, shortlist):
+    """Expected mixed-generation answer, from the public single-table
+    path: every id's ADC score under its own group's quantizer, then
+    one (score desc, id asc) ranking over the union; with ``rerank``,
+    exact cosine over the shortlisted ids' primary vectors."""
+    import numpy as np
+
+    from assignment3_qachatapplication_vectorembeddings_spark.operators.ann import (
+        ivfpq_topk,
+    )
+
+    adc: dict[str, float] = {}
+    for centroids, codebooks, enc in ann._quantizer_groups(
+        ann._vlog.latest(), None
+    ):
+        for r in ivfpq_topk(
+            enc, centroids, codebooks, qvec, 1000, nprobe=nprobe, id_col="id"
+        ).collect():
+            assert r["id"] not in adc  # groups never share an id
+            adc[r["id"]] = r["score"]
+    order = sorted(adc, key=lambda i: (-adc[i], i))
+    if not rerank:
+        return [(i, adc[i]) for i in order[:k]]
+    vecs = {
+        r["id"]: np.asarray(r["vector"], dtype=np.float64)
+        for r in vindex.read().collect()
+    }
+    q = np.asarray(qvec, dtype=np.float64)
+    exact = {
+        i: float(vecs[i] @ q / (np.linalg.norm(vecs[i]) * np.linalg.norm(q)))
+        for i in order[:shortlist]
+    }
+    return sorted(exact.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
+
+
+def test_mixed_generation_search_is_union_then_rank(ann, vindex, spark):
+    """Between a partial retrain and the next compact the index serves
+    two quantizer generations. search and search_batch, ADC-only and
+    re-ranked, must equal scoring each generation under its own
+    quantizer and ranking the union once."""
+    ann.retrain(titles=["formA"])
+    assert len(ann._quantizer_groups(ann._vlog.latest(), None)) == 2
+    texts = ["spark windows", "join strategies", "vector search"]
+    qdf = spark.createDataFrame(
+        [(i, EMB.embed_one(t)) for i, t in enumerate(texts)],
+        "qid int, qvec array<float>",
+    )
+    opts = dict(nprobe=2, shortlist=5)
+    for rerank in (False, True):
+        batch: dict[int, list] = {}
+        for r in ann.search_batch(qdf, 3, rerank=rerank, **opts).collect():
+            batch.setdefault(r["qid"], []).append((r["id"], r["score"]))
+        for qid, text in enumerate(texts):
+            q = EMB.embed_one(text)
+            want = _union_then_rank(ann, vindex, q, 3, rerank=rerank, **opts)
+            single = [
+                (r["id"], r["score"])
+                for r in ann.search(q, 3, rerank=rerank, **opts).collect()
+            ]
+            got_batch = sorted(batch.get(qid, []), key=lambda p: (-p[1], p[0]))
+            for got in (single, got_batch):
+                assert [i for i, _ in got] == [i for i, _ in want], (text, rerank)
+                assert [s for _, s in got] == pytest.approx(
+                    [s for _, s in want], abs=1e-9
+                )
+
+
+def test_search_on_index_with_no_live_titles(ann, vindex, spark):
+    """Every title deleted and refreshed: serving returns no hits
+    rather than failing on an empty quantizer-group list."""
+    vindex.delete_by_form(["formA", "formB", "formC"])
+    ann.refresh()
+    q = EMB.embed_one("spark windows")
+    qdf = spark.createDataFrame([(0, q)], "qid int, qvec array<float>")
+    for rerank in (False, True):
+        assert ann.search(q, 3, rerank=rerank).collect() == []
+        assert ann.search_batch(qdf, 3, rerank=rerank).collect() == []
 
 
 def test_partial_retrain_requires_fresh_index(exact_vindex, tmp_path, spark):
